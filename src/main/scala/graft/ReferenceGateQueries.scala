@@ -13,8 +13,8 @@ import graft.sources.JdbcSource
   * exact answers relationally, while the Spark side must round-trip the
   * reference's actual transport: `~`-packed `product|aisle|qty` detail
   * strings, an all-string JDBC half normalized by cast, positional
-  * union, explode, repairs, broadcast dim join, validation, windowed
-  * classification and quantile segmentation.
+  * union, explode, repairs, broadcast dim join, validation, per-user
+  * aggregate classification and quantile segmentation.
   *
   * Fixture field derivations (all pure functions of o_orderkey so the
   * oracle can mirror them):

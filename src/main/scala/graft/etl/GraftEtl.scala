@@ -14,6 +14,9 @@ import graft.sources.{ConsoleSink, GraftConfig, JdbcSource, ParquetSink, Sink, S
   * values (constructed from [[GraftConfig]] by the caller or
   * [[GraftEtlMain]]) instead of hard-wired connection strings, and no
   * credential ever lives in the code or repo.
+  * `deterministicSegments` no longer changes the plan: segments always
+  * come from each user's highest (order_number, order_id) row, see
+  * [[ReferenceEtl.clientsSegmentation]].
   */
 class GraftEtl(spark: SparkSession,
                ordersFiles: Source,

@@ -1,7 +1,6 @@
 package graft.etl
 
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -26,6 +25,8 @@ case class ProductDetail(product_name: String, aisle: String,
   *    native `when` chains -> whole pipeline is codegen-able;
   *  - all 21 quantile thresholds come from ONE job, not 7 serial
   *    driver actions (ApplaudoETL.scala:250-257);
+  *  - per-user classification is one `groupBy` aggregate per stage,
+  *    not window sums + `dropDuplicates` (SURVEY.md §3.2-3.3);
   *  - the validated frame is cached before fan-out (the reference
   *    recomputes it >= 9 times, SURVEY.md §3.3);
   *  - chained withColumn stages collapse into single selects.
@@ -71,38 +72,33 @@ object ReferenceEtl {
   /** P10-P12: schema-driven trim/abs repair. */
   def validate(df: DataFrame): DataFrame = Validate.clean(df)
 
-  /** U1 (ApplaudoETL.scala:195-225): per-user category from windowed
-    * conditional sums with the reference's integer-division semantics
-    * (label applies iff 100% of the user's products are in the set).
+  /** U1 (ApplaudoETL.scala:195-225): per-user category from one `groupBy`
+    * of conditional sums (partial aggregation shuffles ~one row per user
+    * per task), with the reference's integer-division semantics (label
+    * applies iff 100% of the user's products are in the set).
     * Result: (user_id, category), one row per user, deterministic. */
   def clientsCategory(validated: DataFrame): DataFrame = {
-    val w = Window.partitionBy("user_id")
     def condSum(depts: Seq[String]) =
       sum(when(col("department").isin(depts: _*),
-        col("number_of_products")).otherwise(0)).over(w)
-    val withSums = validated
-      .withColumn("total", sum(col("number_of_products")).over(w))
-      .withColumn("mom", condSum(MomDepartments))
-      .withColumn("single", condSum(SingleDepartments))
-      .withColumn("pet", condSum(PetFriendlyDepartments))
+        col("number_of_products")).otherwise(0))
     val category = Classify.allOrNothingCategory(
-      Seq("Mom" -> col("mom"), "Single" -> col("single"),
-        "Pet Friendly" -> col("pet")),
-      col("total"), "A complete mystery")
-    withSums.withColumn("category", category)
-      .select(col("user_id"), col("category"))
-      .dropDuplicates(Seq("user_id"))
+      Seq("Mom" -> condSum(MomDepartments),
+        "Single" -> condSum(SingleDepartments),
+        "Pet Friendly" -> condSum(PetFriendlyDepartments)),
+      sum(col("number_of_products")), "A complete mystery")
+    validated.groupBy(col("user_id")).agg(category.as("category"))
   }
 
   /** U2 + A3 (ApplaudoETL.scala:231-264): per-day exact quartiles of
     * number_of_products (ONE job, not 7), broadcast-joined; per-user
-    * windowed total; strict `>` thresholds with the reference's dspo
-    * gaps at {8, 9, 20}.
+    * total; strict `>` thresholds with the reference's dspo gaps at
+    * {8, 9, 20}.
     *
-    * `deterministic=true` resolves the reference's arbitrary-row
-    * dropDuplicates (SURVEY.md §3.3) by keeping each user's row with
-    * the highest (order_number, order_id); default preserves
-    * reference-compatible any-row semantics.
+    * One `groupBy("user_id")` yields each user's total and picked row:
+    * the highest (order_number, order_id) among rows whose non-null dow
+    * can join a threshold row (no such row: the user drops out). This
+    * resolves the reference's any-row dropDuplicates (SURVEY.md §3.3)
+    * deterministically, so `deterministic` no longer changes the plan.
     */
   def clientsSegmentation(validated: DataFrame,
                           deterministic: Boolean = false,
@@ -119,30 +115,22 @@ object ReferenceEtl {
         Quantiles.perGroupElement(validated, "order_dow",
           "number_of_products", Seq(0.25, 0.5, 0.75)))
       .withColumnRenamed("order_dow", "dow")
-    val withTotal = validated.withColumn("total_products_bought",
-      sum(col("number_of_products")).over(Window.partitionBy("user_id")))
-    val joined = withTotal.join(broadcast(thresholds),
-      col("order_dow") === col("dow"))
-    val dspo = col("days_since_prior_order")
+    // struct max orders nulls lowest == ORDER BY ... DESC NULLS LAST
+    val perUser = validated.groupBy(col("user_id")).agg(
+      sum(col("number_of_products")).as("total"),
+      max(when(col("order_dow").isNotNull, struct(col("order_number"),
+        col("order_id"), col("order_dow"), col("days_since_prior_order"))))
+        .as("pick"))
+    val joined = perUser.join(broadcast(thresholds),
+      col("pick.order_dow") === col("dow"))
+    val dspo = col("pick.days_since_prior_order")
+    val total = col("total")
     val segment =
-      when(dspo <= 7 && col("total_products_bought") > col("q75"),
-        "You've Got a Friend in Me")
-      .when(dspo.between(10, 19) && col("total_products_bought") > col("q50"),
-        "Baby come Back")
-      .when(dspo > 20 && col("total_products_bought") > col("q25"),
-        "Special Offers")
+      when(dspo <= 7 && total > col("q75"), "You've Got a Friend in Me")
+      .when(dspo.between(10, 19) && total > col("q50"), "Baby come Back")
+      .when(dspo > 20 && total > col("q25"), "Special Offers")
       .otherwise("Undefined")
-    val segmented = joined.withColumn("client_segment", segment)
-    if (deterministic) {
-      val pick = Window.partitionBy("user_id")
-        .orderBy(col("order_number").desc, col("order_id").desc)
-      segmented.withColumn("__rn", row_number().over(pick))
-        .filter(col("__rn") === 1)
-        .select(col("user_id"), col("client_segment"))
-    } else {
-      segmented.select(col("user_id"), col("client_segment"))
-        .dropDuplicates(Seq("user_id"))
-    }
+    joined.select(col("user_id"), segment.as("client_segment"))
   }
 
   /** J2 (ApplaudoETL.scala:59): merge the two per-user classifications. */

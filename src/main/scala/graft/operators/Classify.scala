@@ -8,9 +8,10 @@ import org.apache.spark.sql.functions._
   *
   * The reference ships two Scala UDFs (ApplaudoETL.scala:200-211, 234-245)
   * that block codegen and serialize closures to executors. Both are
-  * re-expressed here as native `when` chains over windowed conditional sums
-  * — provably equivalent (including the reference's integer-division
-  * semantics, see [[allOrNothingCategory]]) and fully codegen-able.
+  * re-expressed here as native `when` chains over per-entity conditional
+  * sums (window columns or `groupBy` aggregates) — provably equivalent
+  * (including the reference's integer-division semantics, see
+  * [[allOrNothingCategory]]) and fully codegen-able.
   */
 object Classify {
 
@@ -34,8 +35,8 @@ object Classify {
     * the entity's rows fall in L's bucket; first match wins; else default.
     *
     * `rules` maps label -> that label's conditional-count column; `total`
-    * is the entity's total count. The emitted plan is a single Window +
-    * one codegen'd CASE chain — no UDF.
+    * is the entity's total count. The chain is one codegen'd CASE — no
+    * UDF.
     */
   def allOrNothingCategory(rules: Seq[(String, Column)], total: Column,
                            default: String): Column =

@@ -9,7 +9,8 @@ import org.apache.spark.sql.functions._
   * `approxQuantile(relativeError=0.0)` actions, one per day-of-week
   * (ApplaudoETL.scala:250-257) — 7 full source re-reads. We compute all
   * groups x all probabilities in a single `groupBy(group).agg(percentile...)`
-  * job: one shuffle on the group key, exact interpolated quantiles
+  * job: one shuffle on the group key and one aggregate buffer per group
+  * for all probabilities, exact interpolated quantiles
   * (Spark `percentile` == SQL percentile_cont == DuckDB quantile_cont).
   *
   * Scale note: exact percentile buffers each group's values on the reducer
@@ -25,14 +26,10 @@ object Quantiles {
   def perGroup(df: DataFrame, groupCol: String, valueCol: String,
                probs: Seq[Double], exact: Boolean = true,
                approxAccuracy: Int = 10000): DataFrame = {
-    val aggs = probs.map { p =>
-      val name = s"q${(p * 100).round}"
-      val c =
-        if (exact) percentile(col(valueCol), lit(p))
-        else percentile_approx(col(valueCol), lit(p), lit(approxAccuracy))
-      c.as(name)
-    }
-    df.groupBy(col(groupCol)).agg(aggs.head, aggs.tail: _*)
+    val ps = array(probs.map(lit): _*)
+    byGroup(df, groupCol, probs,
+      if (exact) percentile(col(valueCol), ps)
+      else percentile_approx(col(valueCol), ps, lit(approxAccuracy)))
   }
 
   /** Element-based quantiles (returns actual data elements), matching
@@ -43,11 +40,15 @@ object Quantiles {
     * larger scales. */
   def perGroupElement(df: DataFrame, groupCol: String, valueCol: String,
                       probs: Seq[Double],
-                      accuracy: Int = 1 << 20): DataFrame = {
-    val aggs = probs.map { p =>
-      percentile_approx(col(valueCol), lit(p), lit(accuracy))
-        .as(s"q${(p * 100).round}")
-    }
-    df.groupBy(col(groupCol)).agg(aggs.head, aggs.tail: _*)
-  }
+                      accuracy: Int = 1 << 20): DataFrame =
+    byGroup(df, groupCol, probs, percentile_approx(col(valueCol),
+      array(probs.map(lit): _*), lit(accuracy)))
+
+  /** One aggregate buffer per group answers every probability; the
+    * array it returns is projected to q_<p*100> columns. */
+  private def byGroup(df: DataFrame, groupCol: String, probs: Seq[Double],
+                      quantiles: Column): DataFrame =
+    df.groupBy(col(groupCol)).agg(quantiles.as("__qs"))
+      .select(col(groupCol) +: probs.indices.map(i =>
+        col("__qs").getItem(i).as(s"q${(probs(i) * 100).round}")): _*)
 }

@@ -68,6 +68,25 @@ class QuantilesSpec extends SparkSpec {
     }
   }
 
+  test("perGroup's one aggregate == per-probability percentile aggregates") {
+    val probs = Seq(0.1, 0.25, 0.5, 0.75, 0.9)
+    val df = ((1 to 200).map(i => (Int.box(i % 4), Int.box((i * 37) % 101))) ++
+      Seq((Int.box(0), null), (Int.box(5), null), (null, Int.box(7))))
+      .toDF("g", "v")
+    def name(p: Double) = s"q${(p * 100).round}"
+    for (exact <- Seq(true, false)) {
+      val perProb = probs.map { p =>
+        (if (exact) percentile($"v", lit(p))
+         else percentile_approx($"v", lit(p), lit(10000))).as(name(p))
+      }
+      val want = df.groupBy($"g").agg(perProb.head, perProb.tail: _*)
+      val got = Quantiles.perGroup(df, "g", "v", probs, exact = exact)
+      assert(got.columns.toSeq == want.columns.toSeq)
+      assert(got.schema.map(_.dataType) == want.schema.map(_.dataType))
+      assert(got.collect().toSet == want.collect().toSet, s"exact=$exact")
+    }
+  }
+
   test("HLL approx_count_distinct within its error bound (sketch alternative to q_count_distinct)") {
     val df = (1 to 20000).map(i => i % 1237).toDF("v")
     val approx = df.select(approx_count_distinct($"v", 0.02)).as[Long].head()
