@@ -663,7 +663,7 @@ object QueriesCatalog {
   // naive narrowing could cost more than the rewrite it saves. AQE's
   // skew-join split bounds the hot partition; the in-query require
   // pins that untouched files still carried across the MERGE. The 10x
-  // replica of this exact query is a ScaleProofTail row (PERF.md).
+  // replica of this exact query is measured in PERF.md (round 10).
   // ---------------------------------------------------------------------
   def catalogMergeSkew(s: SparkSession, dir: String): DataFrame = {
     val (cat, w) = freshCatalog(s)

@@ -1799,8 +1799,8 @@ object QueriesML {
   )
 
   /** Reset the per-sf-dir fitted-model caches that [[oracles]] inlines
-    * (IVF/PQ/SemDeDup centroid literals). Harness hook for
-    * [[graft.tools.OracleFuzz]]: fuzzing runs the same queries over
+    * (IVF/PQ/SemDeDup centroid literals). Harness hook for oracle-pair
+    * fuzzing (`OracleFuzzSpec`), which runs the same queries over
     * several scratch dirs in one JVM, so the single-dir invariant the
     * dynamic oracles rely on must be re-established per dir. */
   private[graft] def resetFittedOracleState(): Unit = {

@@ -1262,7 +1262,7 @@ object QueriesPipeline {
     * DataSketches twins in operators.Sketches stay spec-checked:
     * their estimate depends on the production path — HIP vs composite
     * estimator — so an equality invariant on them is flaky by design;
-    * measured in tools.AbSketch.) */
+    * measured.) */
   def sketchMergeConsistent(s: SparkSession, dir: String): DataFrame = {
     val e = t(s, dir, "events")
       .withColumn("day", expr("ts_ns DIV 86400000000000"))

@@ -21,8 +21,9 @@ object QueriesScale {
   // ---------------------------------------------------------------------
   // Capped LSH candidates: the production configuration.
   // q_minhash_lsh_pairs gates the exact-LSH semantics; THIS gates the
-  // hot-bucket cap actually deployed at scale (ScaleProof measured a
-  // 4,093-member bucket at sf1 = 8.4M pair expansions from one key).
+  // hot-bucket cap actually deployed at scale (the sf1 scale proof,
+  // PERF.md round 5, measured a 4,093-member bucket = 8.4M pair
+  // expansions from one key).
   // Cap chosen to bite at gate scale so the drop path is exercised.
   // ---------------------------------------------------------------------
   val LshBucketCap = 8

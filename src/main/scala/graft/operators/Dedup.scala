@@ -110,7 +110,8 @@ object Dedup {
     * Pairs are expanded bucket-locally (groupBy bucket -> id list ->
     * double explode with id_a < id_b) instead of a bands self-join,
     * which would rebuild the signature pipeline for each join side
-    * (measured slower in tools.AbMinhash, exchange reuse or not).
+    * (measured slower in an interleaved A/B, exchange reuse or not;
+    * PERF.md, round 2).
     * Shuffle volume: one exchange of (band, key, id), then one
     * distinct over candidate pairs.
     *
@@ -194,7 +195,8 @@ object Dedup {
       col(idCol).as("id_a"))
     val b = withBlock.select(col(blockCol), col("shingle"),
       col(idCol).as("id_b"))
-    // measured on sf0.1 (AbNgram A/B): this flat self-join beats both a
+    // measured on sf0.1 (PERF.md, "What was changed and why (round
+    // 2)": 2.5 s vs 4.1 s): this flat self-join beats both a
     // posting-list explode (slice() copies O(m)-arrays per emitted pair
     // on hot shingles) and carrying sz through the explode (size(arr)
     // next to explode(arr) recomputes the shingling per reference) —
@@ -453,7 +455,8 @@ object Dedup {
     * Partition count follows the (AQE-coalesced) input RDDs, so local
     * runs don't pay 32-task overhead per tiny round while a 1000-
     * executor run inherits the scan's real parallelism. Measured at
-    * sf0.1 (BenchOne warm min, 1.77M-pair graph, 2.0 s LSH floor):
+    * sf0.1 (warm min-of-3, 1.77M-pair graph, 2.0 s LSH floor; PERF.md,
+    * "Round-5: min-label clustering rebuilt as an RDD Pregel loop"):
     * composed keeper 138 s -> 5.1 s, standalone clusters 4.8 s (vs
     * 6.0 s for a per-round lazy localCheckpoint variant of the SQL
     * loop). Earlier rounds benched the SQL loop's bare clustering at

@@ -53,7 +53,7 @@ object Sketches {
   // Deterministic mergeable HLL (graft-native, plans.HllDet): unlike
   // the library sketches above — whose estimate depends on HOW the
   // sketch was produced (streamed vs union'd applies HIP vs composite
-  // estimators; measured in tools.AbSketch) — these keep only the
+  // estimators; measured) — these keep only the
   // max-register state, so merge-of-partials == one-shot EXACTLY for
   // any split of the input. That equality is what lets the sketch tier
   // ride the deterministic oracle gate (q_sketch_merge).

@@ -14,8 +14,8 @@ import org.apache.spark.sql.types._
   * streamed sketches use the HIP accumulator, union results fall back
   * to the composite estimator — so `estimate(merge(partials))` is not
   * reproducibly equal to `estimate(one_shot)`, and the difference
-  * depends on how the input happened to be split (measured in
-  * `tools.AbSketch`: identical input sets, estimates 1480–1499).
+  * depends on how the input happened to be split (measured:
+  * identical input sets, estimates 1480–1499).
   *
   * This sketch keeps ONLY the classic HLL register array: update is
   * `register[slot] = max(register[slot], rho)`, merge is element-wise

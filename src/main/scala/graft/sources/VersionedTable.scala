@@ -1764,14 +1764,9 @@ object VersionedTable {
     * that left this delete's tombstoned files in place (appends,
     * disjoint rewrites) triggers a recompute-and-retry from the new
     * head; one that rewrote them aborts loudly (the tombstones' file
-    * identities would dangle). */
-  def deleteCommitOptimistic(spark: SparkSession, table: String,
-                             predicate: org.apache.spark.sql.Column,
-                             keyCols: Seq[String],
-                             maxRetries: Int = 5): Int =
-    deleteCommitOptimisticHook(spark, table, predicate, keyCols, maxRetries)
-
-  private[sources] def deleteCommitOptimisticHook(
+    * identities would dangle). `onAttempt` is the pre-publish hook
+    * seam of [[mergeCommitOptimistic]]. */
+  def deleteCommitOptimistic(
       spark: SparkSession, table: String,
       predicate: org.apache.spark.sql.Column, keyCols: Seq[String],
       maxRetries: Int = 5, onAttempt: Int => Unit = _ => ()): Int =
@@ -1908,16 +1903,10 @@ object VersionedTable {
 
   /** [[updateCommit]] with optimistic concurrency — same conflict
     * re-evaluation as [[mergeCommitOptimistic]]: retries from the new
-    * head unless the interloper rewrote a file this update touched. */
-  def updateCommitOptimistic(spark: SparkSession, table: String,
-                             predicate: org.apache.spark.sql.Column,
-                             set: Map[String, org.apache.spark.sql.Column],
-                             ranges: Seq[(String, Long, Long)] = Nil,
-                             maxRetries: Int = 5): Int =
-    updateCommitOptimisticHook(spark, table, predicate, set, ranges,
-      maxRetries)
-
-  private[sources] def updateCommitOptimisticHook(
+    * head unless the interloper rewrote a file this update touched.
+    * `onAttempt` is the pre-publish hook seam of
+    * [[mergeCommitOptimistic]]. */
+  def updateCommitOptimistic(
       spark: SparkSession, table: String,
       predicate: org.apache.spark.sql.Column,
       set: Map[String, org.apache.spark.sql.Column],
@@ -2857,18 +2846,12 @@ object VersionedTable {
     *    re-applying this merge over theirs may not be what either
     *    writer intended. Re-run deliberately after review.
     * Failed attempts' data files become orphans ([[cleanOrphans]]
-    * reclaims them). Returns the committed version. */
-  def mergeCommitOptimistic(spark: SparkSession, table: String,
-                            source: DataFrame, keyCol: String,
-                            deleteCol: Option[String] = None,
-                            maxRetries: Int = 5): Int =
-    mergeCommitOptimisticHook(spark, table, source, keyCol, deleteCol,
-      maxRetries)
-
-  /** [[mergeCommitOptimistic]] with the pre-publish hook seam (same
-    * contract as [[commitWithRetryHook]]) — how specs inject a
-    * deterministic interloper between this merge's read and publish. */
-  private[sources] def mergeCommitOptimisticHook(
+    * reclaims them). Returns the committed version.
+    *
+    * `onAttempt` is the pre-publish hook seam (same contract as
+    * [[commitWithRetryHook]]) — how specs inject a deterministic
+    * interloper between this merge's read and publish. */
+  def mergeCommitOptimistic(
       spark: SparkSession, table: String, source: DataFrame,
       keyCol: String, deleteCol: Option[String] = None,
       maxRetries: Int = 5, onAttempt: Int => Unit = _ => ()): Int =
@@ -2945,17 +2928,9 @@ object VersionedTable {
 
   /** [[mergeCommitWhen]] under [[mergeCommitOptimistic]]'s conflict
     * re-evaluation loop: disjoint interlopers retry from the new
-    * head, true overlap aborts loudly. */
-  def mergeCommitWhenOptimistic(spark: SparkSession, table: String,
-                                source: DataFrame, keyCol: String,
-                                matched: Seq[MergeClause] = Nil,
-                                notMatched: Seq[MergeClause] = Nil,
-                                notMatchedBySource: Seq[MergeClause] = Nil,
-                                maxRetries: Int = 5): Int =
-    mergeCommitWhenOptimisticHook(spark, table, source, keyCol, matched,
-      notMatched, notMatchedBySource, maxRetries)
-
-  private[sources] def mergeCommitWhenOptimisticHook(
+    * head, true overlap aborts loudly. `onAttempt` is the pre-publish
+    * hook seam of [[mergeCommitOptimistic]]. */
+  def mergeCommitWhenOptimistic(
       spark: SparkSession, table: String, source: DataFrame,
       keyCol: String, matched: Seq[MergeClause] = Nil,
       notMatched: Seq[MergeClause] = Nil,

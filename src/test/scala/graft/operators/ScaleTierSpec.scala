@@ -287,8 +287,9 @@ class ScaleTierSpec extends SparkSpec {
     // of all nodes over a sparse random background. Both Pregel loops
     // hash-partition raw ids, so the hub's whole adjacency sits in one
     // partition — this pins correctness under that imbalance (the
-    // wall-clock skew itself is metered by tools.SkewStress at
-    // n=50,000; measured worst-stage skew < 2x, so no salting).
+    // wall-clock skew itself was measured at n=50,000: worst-stage
+    // skew < 2x, so no salting; PERF.md, "Round-6: Pregel loops
+    // skew-stressed").
     import spark.implicits._
     val rnd = new scala.util.Random(31)
     val n = 300L

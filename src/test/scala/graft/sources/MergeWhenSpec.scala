@@ -189,7 +189,7 @@ class MergeWhenSpec extends SparkSpec {
       (1L to 20L).map(k => (k, k * 10)).toDF("k", "cents").coalesce(1),
       append = false, statCols = Seq("k"))
     var fired = false
-    val v = VersionedTable.mergeCommitWhenOptimisticHook(spark, t,
+    val v = VersionedTable.mergeCommitWhenOptimistic(spark, t,
       Seq((5L, 1L)).toDF("k", "delta"), "k",
       matched = Seq(whenMatchedUpdate(
         Map("cents" -> (col("t.cents") + col("s.delta"))))),

@@ -35,7 +35,7 @@ class OptimisticConcurrencySpec extends SparkSpec {
       statCols = Seq("k"))
     val attempts = new AtomicInteger(0)
     val appended = (200L to 210L).map(k => (k, k * 1.0)).toDF("k", "amt")
-    val vFinal = VersionedTable.mergeCommitOptimisticHook(spark, t,
+    val vFinal = VersionedTable.mergeCommitOptimistic(spark, t,
       Seq((5L, 555.0)).toDF("k", "amt"), "k",
       onAttempt = { _ =>
         // interloper publishes an APPEND between our read and publish,
@@ -60,7 +60,7 @@ class OptimisticConcurrencySpec extends SparkSpec {
       statCols = Seq("k"))
     val fired = new AtomicInteger(0)
     val e = intercept[java.util.ConcurrentModificationException] {
-      VersionedTable.mergeCommitOptimisticHook(spark, t,
+      VersionedTable.mergeCommitOptimistic(spark, t,
         Seq((5L, 555.0)).toDF("k", "amt"), "k",
         onAttempt = { _ =>
           // interloper merges the SAME key → rewrites the same file
@@ -84,7 +84,7 @@ class OptimisticConcurrencySpec extends SparkSpec {
       statCols = Seq("k"))
     val fired = new AtomicInteger(0)
     // k=5 lives in the first quarter, k=95 in the last — different files
-    val vFinal = VersionedTable.mergeCommitOptimisticHook(spark, t,
+    val vFinal = VersionedTable.mergeCommitOptimistic(spark, t,
       Seq((5L, 555.0)).toDF("k", "amt"), "k",
       onAttempt = { _ =>
         if (fired.incrementAndGet() == 1)
@@ -103,7 +103,7 @@ class OptimisticConcurrencySpec extends SparkSpec {
       base.repartitionByRange(4, col("k")), append = false,
       statCols = Seq("k"))
     val fired = new AtomicInteger(0)
-    val v = VersionedTable.deleteCommitOptimisticHook(spark, t,
+    val v = VersionedTable.deleteCommitOptimistic(spark, t,
       col("k") % 10 === 0, Seq("k"),
       onAttempt = { _ =>
         if (fired.incrementAndGet() == 1)
@@ -118,7 +118,7 @@ class OptimisticConcurrencySpec extends SparkSpec {
     // now a delete racing a merge that rewrites its tombstoned file
     val fired2 = new AtomicInteger(0)
     val e = intercept[java.util.ConcurrentModificationException] {
-      VersionedTable.deleteCommitOptimisticHook(spark, t,
+      VersionedTable.deleteCommitOptimistic(spark, t,
         col("k") === 7L, Seq("k"),
         onAttempt = { _ =>
           if (fired2.incrementAndGet() == 1)
@@ -135,7 +135,7 @@ class OptimisticConcurrencySpec extends SparkSpec {
       base.repartitionByRange(2, col("k")), append = false)
     val n = new AtomicInteger(0)
     val e = intercept[RuntimeException] {
-      VersionedTable.mergeCommitOptimisticHook(spark, t,
+      VersionedTable.mergeCommitOptimistic(spark, t,
         Seq((5L, 5.5)).toDF("k", "amt"), "k", maxRetries = 2,
         onAttempt = { _ =>
           n.incrementAndGet()

@@ -153,7 +153,7 @@ class TableUpdateSpec extends SparkSpec {
       (1L to 50L).map(i => (i, i)).toDF("k", "x")
         .repartitionByRange(2, col("k")), append = false)
     var fired = false
-    val v = VersionedTable.updateCommitOptimisticHook(spark, t,
+    val v = VersionedTable.updateCommitOptimistic(spark, t,
       col("k") === 10L, Map("x" -> lit(-1L)),
       onAttempt = { _ =>
         if (!fired) { // interloper appends between read and publish
