@@ -395,8 +395,7 @@ object QueriesCatalog {
     VT.mergeCommit(s, t0,
       base.filter(col("o_orderkey") % 30 === 0)
         .withColumn("price_cents", col("price_cents") * 2), "o_orderkey")
-    VT.deleteCommit(s, t0, col("o_orderkey") % 3000 === 0,
-      Seq("o_orderkey"))
+    VT.deleteCommit(s, t0, col("o_orderkey") % 3000 === 0)
     val q = s.readStream.format("graft")
       .option("maxVersionsPerBatch", 1)
       .load(t0)
@@ -749,7 +748,7 @@ object QueriesCatalog {
       base.filter(col("o_orderkey") % 3 === 1).coalesce(1),
       append = true)
     // a positional-delete sidecar: history must show the dv debt
-    VersionedTable.deleteCommitPositional(s, ord,
+    VersionedTable.deleteCommit(s, ord,
       col("o_orderkey") % 3000 === 0)
     VersionedTable.tagVersion(s, ord, "audit", 2)
     VersionedTable.setTableProperty(s, ord, "write.delete.mode",
@@ -1452,7 +1451,7 @@ object QueriesCatalog {
       .createOrReplaceTempView("cpt_src_two")
     s.sql(s"INSERT INTO $cat.cpt.branch_dev SELECT * FROM cpt_src_two")
     VersionedTable.deleteCommit(s, s"$w/cpt/_branch/dev",
-      col("o_orderkey") % 30 === 0, Seq("o_orderkey"))
+      col("o_orderkey") % 30 === 0)
     // main diverges disjointly: appends the %3=1 class
     src.filter(col("o_orderkey") % 3 === 1)
       .createOrReplaceTempView("cpt_src_one")

@@ -874,7 +874,7 @@ object QueriesPipeline {
     graft.sources.VersionedTable.mergeCommit(s, table,
       updates.unionByName(deletes), "o_orderkey", deleteCol = Some("__del"))
     graft.sources.VersionedTable.deleteCommit(s, table,
-      col("o_orderkey") % 23 === 0, Seq("o_orderkey"))
+      col("o_orderkey") % 23 === 0)
     val drained = graft.streaming.TableChangeStream.drainToJdbc(s, table,
       s"$work/ckpt", sink)
     require(drained == 2, s"second sync must ship exactly the 2 commits")

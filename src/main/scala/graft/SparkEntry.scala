@@ -1436,7 +1436,7 @@ object Queries {
     graft.sources.VersionedTable.commit(s, table,
       base.repartition(64), append = false, statCols = Seq("o_orderkey"))
     graft.sources.VersionedTable.deleteCommit(s, table,
-      col("o_orderkey") % 7 === 0, Seq("o_orderkey"))
+      col("o_orderkey") % 7 === 0)
     val n = base.count()
     val v3 = graft.sources.VersionedTable.compactCommit(s, table,
       targetRows = math.max(n / 4, 1L))
@@ -1584,10 +1584,9 @@ object Queries {
     graft.sources.VersionedTable.commit(s, table,
       base.repartitionByRange(8, col("o_orderkey")), append = false)
     graft.sources.VersionedTable.deleteCommit(s, table,
-      col("o_orderkey") % 7 === 0, Seq("o_orderkey"))
+      col("o_orderkey") % 7 === 0)
     graft.sources.VersionedTable.deleteCommit(s, table,
-      col("o_orderstatus") === "F" && col("o_orderkey") % 5 === 0,
-      Seq("o_orderkey"))
+      col("o_orderstatus") === "F" && col("o_orderkey") % 5 === 0)
     val m = (v: Int) => graft.sources.VersionedTable
       .dataFilesOf(graft.sources.VersionedTable.manifest(s, table, v))
     require(m(2) == m(1) && m(3) == m(1),
@@ -1804,7 +1803,7 @@ object Queries {
     graft.sources.VersionedTable.commitPartitioned(s, table, base,
       "o_orderstatus", append = false, statCols = Seq("o_orderkey"))
     graft.sources.VersionedTable.deleteCommit(s, table,
-      col("o_orderkey") % 97 === 0, Seq("o_orderkey"))
+      col("o_orderkey") % 97 === 0)
     graft.sources.VersionedTable.partitionStats(s, table,
       "o_orderstatus", "o_orderkey")
       .select(col("o_orderstatus"), col("n_rows"),
@@ -2185,7 +2184,7 @@ object Queries {
     }
     (0 until 4).foreach { i =>
       VersionedTable.deleteCommit(s, table,
-        col("k") === (i * 32 + 1).toLong, Seq("k"))
+        col("k") === (i * 32 + 1).toLong)
     }
     // target ~8 right-sized files so the compact's own outputs still
     // trip the staleness check (recluster restores the z-layout)
@@ -2248,7 +2247,7 @@ object Queries {
     VersionedTable.mergeCommit(s, table,
       base.withColumn("cents", col("cents") + 100L), "k")
     // v4: a delete after the cut
-    VersionedTable.deleteCommit(s, table, col("k") % 100 === 0, Seq("k"))
+    VersionedTable.deleteCommit(s, table, col("k") % 100 === 0)
     VersionedTable.vacuum(s, table, keepLast = 1)
     val vs = VersionedTable.versions(s, table)
     require(vs == Seq(2, 4),
@@ -2288,7 +2287,7 @@ object Queries {
       statCols = Seq("k", "d"))
     // a one-DAY delete: its tombstones confine to the date-clustered
     // file(s) holding that day, so they alone become boundary files
-    VersionedTable.deleteCommit(s, table, col("d") === "1995-07-04", Seq("k"))
+    VersionedTable.deleteCommit(s, table, col("d") === "1995-07-04")
     val (q, qc, _) = VersionedTable.countWhereDetailed(s, table,
       Seq(StrBetween("d", "1995-04-01", "1995-06-30")))
     require(qc > 0,
@@ -2387,7 +2386,7 @@ object Queries {
     val mxk = base.agg(max(col("k"))).collect()(0).getLong(0)
     // DV-delete the global max key: the metadata answer must not
     // resurrect it (tombstoned files are read, not trusted)
-    VersionedTable.deleteCommit(s, table, col("k") === mxk, Seq("k"))
+    VersionedTable.deleteCommit(s, table, col("k") === mxk)
     val (qmn, qmx) = VersionedTable.minMaxWhere(s, table, "k",
       Seq(StrBetween("d", "1995-04-01", "1995-06-30"),
         PartIn("status", Seq("F"))))
@@ -2485,8 +2484,7 @@ object Queries {
       "ts_ns", dayNs, append = false, statCols = Seq("ts_ns"))
     val mn = ev.agg(min(col("ts_ns"))).collect()(0).getLong(0)
     graft.sources.VersionedTable.deleteCommit(s, table,
-      col("ts_ns") < mn + 3L * dayNs && col("user_id") % 2 === 0,
-      Seq("event_id"))
+      col("ts_ns") < mn + 3L * dayNs && col("user_id") % 2 === 0)
     val tcol = s"__part_div_ts_ns_$dayNs"
     graft.sources.VersionedTable.partitionCounts(s, table, tcol)
       .withColumnRenamed(tcol, "day_tag")
@@ -2655,7 +2653,7 @@ object Queries {
       "o_orderkey", deleteCol = Some("__del"))
     graft.sources.MaterializedView.refresh(s, table, mv)
     graft.sources.VersionedTable.deleteCommit(s, table,
-      col("o_orderkey") % 19 === 0, Seq("o_orderkey"))
+      col("o_orderkey") % 19 === 0)
     graft.sources.MaterializedView.refresh(s, table, mv)
     require(graft.sources.MaterializedView.sourceVersion(s, mv) == 3,
       "view must have tracked the source head incrementally")
@@ -2720,7 +2718,7 @@ object Queries {
     graft.sources.VersionedTable.mergeCommit(s, table,
       updates.unionByName(deletes), "o_orderkey", deleteCol = Some("__del"))
     graft.sources.VersionedTable.deleteCommit(s, table,
-      col("o_orderkey") % 23 === 0, Seq("o_orderkey"))
+      col("o_orderkey") % 23 === 0)
     val d2 = graft.streaming.TableChangeStream
       .drainToVersionedTable(s, table, dest, ckpt)
     require(d1 == 1 && d2 == 3,
@@ -2783,7 +2781,7 @@ object Queries {
     graft.sources.VersionedTable.commit(s, table,
       base.repartitionByRange(8, col("o_orderkey")), append = false)
     graft.sources.VersionedTable.deleteCommit(s, table,
-      col("o_orderkey") % 7 === 0, Seq("o_orderkey"))
+      col("o_orderkey") % 7 === 0)
     graft.sources.VersionedTable.mergeCommit(s, table,
       base.filter(col("o_orderkey") % 13 === 0)
         .withColumn("price_cents", col("price_cents") * 2),
@@ -2835,7 +2833,7 @@ object Queries {
     // retention-style range delete: the doomed scan opens only the
     // files whose [min,max] intersects the band
     val v3 = VT.deleteCommitPruned(s, table, Seq(("o_orderkey", 1000L, 3000L)),
-      lit(true), Seq("o_orderkey"))
+      lit(true))
     require(VT.versionAsOf(s, table, System.currentTimeMillis()) == v3,
       "TIMESTAMP AS OF now must resolve to the head version")
     VT.statsAggregate(s, table, Seq("o_orderkey", "price_cents"))
@@ -2879,7 +2877,7 @@ object Queries {
     VT.commitBucketed(s, ta, o.filter(col("o_orderkey") % 4 === 0),
       "custkey", 8, append = true)
     VT.commitBucketed(s, tb, c, "custkey", 8, append = false)
-    VT.deleteCommit(s, ta, col("o_orderkey") % 9 === 0, Seq("o_orderkey"))
+    VT.deleteCommit(s, ta, col("o_orderkey") % 9 === 0)
     val joined = VT.bucketJoin(s, ta, tb, "custkey")
     val plan = joined.queryExecution.executedPlan.toString
     require("Exchange (hash|range|roundrobin|Single)".r
@@ -2932,8 +2930,7 @@ object Queries {
       "custkey", 8, append = true)
     JMV.refresh(s, fact, dim, mv)
     // fact DV delete, then refresh
-    VT.deleteCommit(s, fact, col("o_orderkey") % 9 === 0,
-      Seq("o_orderkey"))
+    VT.deleteCommit(s, fact, col("o_orderkey") % 9 === 0)
     JMV.refresh(s, fact, dim, mv)
     // dimension merge: a tenth of the customers switch segment
     VT.mergeCommit(s, dim,

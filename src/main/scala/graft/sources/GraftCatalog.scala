@@ -462,7 +462,7 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog
     def liveRef(c: String): Option[String] =
       refs.getOrElse(c, Set.empty).intersect(constraints).headOption
     // structural facts the DROP-COLUMN commit enforces, from the head
-    // manifest (partition specs / dv keys / bucket tags cannot change
+    // manifest (partition specs / bucket tags cannot change
     // mid-ALTER); renames inside the sequence track original names so
     // the physical identity stays resolvable
     lazy val lines = VersionedTable.manifest(spark, p,
@@ -472,11 +472,6 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog
     def physicalOf(c: String): String = {
       val orig = origOf.getOrElse(c, c)
       renameMap.getOrElse(orig, orig)
-    }
-    lazy val dvKeyCols: Set[String] = {
-      val dvs = VersionedTable.dvFilesOf(lines)
-      if (dvs.isEmpty) Set.empty
-      else spark.read.parquet(dvs: _*).columns.toSet
     }
     // snapshot reshaped through the sequence, built lazily (only ADD
     // CONSTRAINT forces a read; pure column DDL stays metadata-only)
@@ -524,9 +519,6 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog
             t._1.startsWith(s"__part_div_${physC}_")),
           s"ALTER would fail: '$c' keys a bucket/transform spec — " +
             "rewrite first")
-        require(!dvKeyCols.contains(physC),
-          s"ALTER would fail: '$c' keys the live deletion vectors — " +
-            "purge tombstones before dropping")
         schema = StructType(schema.fields.filterNot(_.name == c))
         val prev = reshape
         reshape = df => prev(df).drop(c)

@@ -80,21 +80,9 @@ private[sources] class GraftRowLevelOperationBuilder(
       case RowLevelOperation.Command.MERGE => "write.merge.mode"
     }
     if (VersionedTable.tablePropertyOf(spark, path, key)
-        .contains("merge-on-read")) {
-      // the delta path's tombstones are positional — live sidecars
-      // keyed by table columns would not compose on the read side
-      val dvs = VersionedTable.dvFilesOf(
-        VersionedTable.manifest(spark, path, pinned))
-      if (dvs.nonEmpty) {
-        val keys = spark.read.parquet(dvs: _*).columns
-          .filterNot(_ == VersionedTable.FileColName).toSet
-        require(keys == Set(VersionedTable.PosCol),
-          s"table's live tombstones are keyed by $keys; merge-on-read " +
-            s"${info.command()} would not compose — purge_tombstones " +
-            "first, or unset the merge-on-read mode")
-      }
+        .contains("merge-on-read"))
       new GraftDeltaOperation(path, pinned, info.command())
-    } else new GraftRowLevelOperation(path, pinned, info.command())
+    else new GraftRowLevelOperation(path, pinned, info.command())
   }
 }
 
@@ -592,8 +580,8 @@ private[sources] class SerializableHadoopConf(
   *    filtering exactly like the COW scan;
   *  - the engine hands the writer per-row OPERATIONS: `delete(id)`
   *    and the old-image side of `update` become POSITIONAL TOMBSTONES
-  *    (`(__gf, __gpos)` sidecar rows — the same deletion vectors the
-  *    gated [[VersionedTable.deleteCommitPositional]] writes);
+  *    (`(__gf, __gpos)` sidecar rows — the same deletion vectors
+  *    [[VersionedTable.deleteCommit]] writes);
   *    `insert(row)` and the new-image side land in fresh parquet;
   *  - ONE atomic [[VersionedTable.deltaFilesCommit]] publishes:
   *    every existing file carries VERBATIM, the sidecars and new
@@ -688,7 +676,7 @@ private[sources] class GraftDeltaBatchWrite(
       : org.apache.spark.sql.connector.write.DeltaWriterFactory = {
     val dataConf = GraftParquetWriteConf.prepared(spark, physSchema)
     val tombConf = GraftParquetWriteConf.prepared(spark,
-      GraftDeltaBatchWrite.TombSchema)
+      VersionedTable.DvSchema)
     val codec = spark.conf.get("spark.sql.parquet.compression.codec")
     new GraftDeltaWriterFactory(writeDir,
       new SerializableHadoopConf(dataConf),
@@ -712,18 +700,6 @@ private[sources] class GraftDeltaBatchWrite(
     f.delete(dir, true)
     ()
   }
-}
-
-private[sources] object GraftDeltaBatchWrite {
-  /** The positional tombstone sidecar shape — identical to what
-    * [[VersionedTable.deleteCommitPositional]] writes, so the read
-    * side and `purge_tombstones` treat both interchangeably. */
-  val TombSchema: StructType = StructType(Seq(
-    org.apache.spark.sql.types.StructField(
-      VersionedTable.FileColName, StringType, nullable = true),
-    org.apache.spark.sql.types.StructField(
-      VersionedTable.PosCol, org.apache.spark.sql.types.LongType,
-      nullable = true)))
 }
 
 /** `(data files with pt tags, tombstone sidecar paths)` per task. */

@@ -38,9 +38,10 @@ final class GraftProtocolException(message: String)
   *
   * Manifest lines are either a plain data-file path or
   * `dv<TAB><path>` naming a DELETION-VECTOR sidecar (parquet of
-  * `(__gf, key...)` tombstones, see [[deleteCommit]]); readers apply
-  * every listed sidecar as a (file, key) anti-join, so a delete
-  * commits in O(matching rows) without rewriting any data file —
+  * `(__gf, __gpos)` positional tombstones, see [[deleteCommit]]);
+  * readers apply every listed sidecar as a (file, position)
+  * anti-join, so a delete commits in O(matching rows) without
+  * rewriting any data file —
   * merge-on-read, purged back to pure files whenever [[mergeCommit]]
   * rewrites the underlying data.
   *
@@ -63,11 +64,18 @@ object VersionedTable {
   /** Reserved POSITIONAL tombstone key: the row's ordinal within its
     * data file, materialized from the parquet reader's
     * `_metadata.row_index` — stable forever because data files are
-    * immutable (only ever replaced whole). A sidecar keyed
-    * `(__gf, __gpos)` identifies rows with NO table key at all, which
-    * is what SQL merge-on-read DELETE writes (Delta's deletion
-    * vectors / Iceberg's positional deletes key the same way). */
+    * immutable (only ever replaced whole). Every sidecar is keyed
+    * `(__gf, __gpos)`: rows are identified with NO table key at all
+    * (Delta's deletion vectors / Iceberg's positional deletes key the
+    * same way). */
   private[sources] val PosCol = "__gpos"
+
+  /** The one deletion-vector sidecar schema (FORMAT.md `dv`). */
+  private[sources] val DvSchema = org.apache.spark.sql.types.StructType(Seq(
+    org.apache.spark.sql.types.StructField(FileCol,
+      org.apache.spark.sql.types.StringType),
+    org.apache.spark.sql.types.StructField(PosCol,
+      org.apache.spark.sql.types.LongType)))
 
   /** [[FileCol]] for the package's DSv2 surfaces (the tagged reads
     * keep the file identity under this internal name until the public
@@ -185,15 +193,15 @@ object VersionedTable {
   private val ScPrefix = "sc\t"
 
   /** COLUMN MAPPING LINE `cm<TAB><logical>=<physical>` (rename) or
-    * `cm<TAB>=<physical>` (drop): data files, st keys, pt tags, and
-    * dv sidecar key columns always store PHYSICAL names — the name a
-    * column was FIRST written under, its immutable identity — while
+    * `cm<TAB>=<physical>` (drop): data files, st keys and pt tags
+    * always store PHYSICAL names — the name a column was FIRST
+    * written under, its immutable identity — while
     * every public API speaks LOGICAL names. The cm lines of a
     * manifest define the (bijective) physical→logical view of THAT
     * version, so RENAME/DROP COLUMN are metadata-only commits (zero
     * data I/O on a 100 TB table) and time travel shows each version
     * under its own names. Reads translate at the [[readSnapshot]]
-    * seam (after the dv anti-join, which runs physical); writes
+    * seam (after the dv anti-join, which keys on file rows); writes
     * translate at [[toPhysicalDf]] before any file is produced.
     * Tables with cm lines demand the `column-mapping` reader feature
     * ([[requireFeature]]) — an old build would surface physical
@@ -528,9 +536,8 @@ object VersionedTable {
     (_, _) => ()
 
   /** Test seam: fired `(candidates, totalFiles)` by
-    * [[deleteCommitPruned]]'s doomed scan after file skipping — what
-    * the spec pins to prove a range delete opens only candidate
-    * files. */
+    * [[deleteCommit]]'s doomed scan after file skipping — what the
+    * spec pins to prove a range delete opens only candidate files. */
   private[sources] var deletePruneNotifier: (Int, Int) => Unit =
     (_, _) => ()
 
@@ -676,20 +683,6 @@ object VersionedTable {
     lines.collect { case l if l.startsWith(DvPrefix) =>
       l.substring(DvPrefix.length) }
 
-  /** The shared schema of a snapshot's dv sidecars from ONE footer
-    * open — all live sidecars of one table share one key schema
-    * (FORMAT.md `dv`), and Spark wrote them, so the footer's
-    * StructType JSON is the exact answer. `spark.read.parquet(dvs)`
-    * pays an InMemoryFileIndex listing PLUS a schema-inference footer
-    * read per call for the same information; at sidecar counts past
-    * the parallel-discovery threshold the listing alone is a whole
-    * Spark job. Falls back to the inference read if the metadata key
-    * is ever absent (a non-Spark writer — never our own sidecars). */
-  private[sources] def dvSchemaOf(spark: SparkSession, dvs: Seq[String])
-      : org.apache.spark.sql.types.StructType =
-    footerSparkSchema(spark, dvs.head)
-      .getOrElse(spark.read.parquet(dvs: _*).schema)
-
   /** The Spark StructType a Spark writer recorded in one parquet
     * file's footer metadata — ONE footer open, no listing, no
     * inference job. None when the key is absent (a non-Spark writer)
@@ -749,26 +742,30 @@ object VersionedTable {
   }
 
   /** A snapshot's dv sidecars as a DataFrame planned from known
-    * metadata: explicit schema (one footer open), manifest-fed
-    * [[GraftFileIndex]] scan with fz sizes — no listing job, no
-    * inference job, no stats for sized sidecars. */
+    * metadata: the fixed [[DvSchema]], manifest-fed [[GraftFileIndex]]
+    * scan with fz sizes — no footer open, no listing job, no inference
+    * job, no stats for sized sidecars. A sidecar without [[PosCol]]
+    * (an older build's key-keyed tombstones) reads as NULL positions,
+    * which would match nothing and silently resurrect its rows — so a
+    * NULL position fails the query instead, checked on this tiny
+    * tombstone side only. */
   private def dvFrame(spark: SparkSession, dvs: Seq[String],
-                      sizes: String => Option[Long]): DataFrame =
-    GraftFileIndex.parquetFrame(spark, dvs,
-      org.apache.spark.sql.types.StructType(
-        dvSchemaOf(spark, dvs).fields.map(_.copy(nullable = true))),
-      sizes)
+                      sizes: String => Option[Long]): DataFrame = {
+    import org.apache.spark.sql.functions.{col, lit, raise_error, when}
+    GraftFileIndex.parquetFrame(spark, dvs, DvSchema, sizes)
+      .withColumn(PosCol, when(col(PosCol).isNull, raise_error(lit(
+        "deletion-vector sidecar without __gpos positions: key-keyed " +
+          "tombstones from an older build are no longer readable — " +
+          "purge them (purge_tombstones / OPTIMIZE) with that build")))
+        .otherwise(col(PosCol)))
+  }
 
   /** The dv sidecars projected to [[FileCol]] only — the shape every
-    * tombstoned-file probe takes. The fixed one-column schema needs
-    * ZERO footer opens and unions sidecar generations with different
-    * key schemas (e.g. a diff across two versions' manifests). */
+    * tombstoned-file probe takes. */
   private def dvFileColFrame(spark: SparkSession, dvs: Seq[String],
                              sizes: String => Option[Long]): DataFrame =
     GraftFileIndex.parquetFrame(spark, dvs,
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField(FileCol,
-          org.apache.spark.sql.types.StringType))), sizes)
+      org.apache.spark.sql.types.StructType(Seq(DvSchema(FileCol))), sizes)
 
   private def fs(spark: SparkSession, p: Path) =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -1470,7 +1467,7 @@ object VersionedTable {
     * read merges the file schemas, and rows from files written before
     * a column existed surface it as NULL — the standard
     * add-column-without-rewrite contract. Deletion-vector sidecars in
-    * the manifest are applied as a broadcast (file, key) anti-join;
+    * the manifest are applied as a broadcast (file, position) anti-join;
     * with no sidecars the read is a plain pruned parquet scan. */
   def read(spark: SparkSession, table: String,
            version: Option[Int] = None): DataFrame = {
@@ -1526,9 +1523,9 @@ object VersionedTable {
 
   /** Materialize a manifest's logical content: merged-schema scan of
     * its data files minus every deletion-vector tombstone. Tombstones
-    * are keyed (file, key...): only the row with that key IN that
-    * exact file dies, so a later commit re-inserting the key in a new
-    * file is unaffected. The sidecar union is O(deleted rows) and
+    * are keyed (file, position): only that row of that exact file
+    * dies, so a later commit re-inserting its key in a new file is
+    * unaffected. The sidecar union is O(deleted rows) and
     * broadcast — at 100 TB the anti-join costs one broadcast probe
     * per scanned row, zero shuffle of the data side. */
   /** The base parquet frame over a snapshot's data files. When the
@@ -1594,12 +1591,9 @@ object VersionedTable {
       // no default-era files in this snapshot: the original single
       // explicit-schema scan
       val base = baseSnapshotRead(spark, lines, data)
-      // dv sidecars key on PHYSICAL names: the anti-join runs before
-      // the cm translation, so tombstones survive any later rename
       widenToDeclared(applyMapping(if (dvs.isEmpty) base
-      else applyTombstones(spark,
-        base.withColumn(FileCol, normFileExpr), dvs,
-        fzLookup(lines)).drop(FileCol),
+      else applyTombstones(spark, withRowId(base), dvs,
+        fzLookup(lines)).drop(FileCol, PosCol),
         lines), lines)
     } else {
       // DECLARED DEFAULTS over pre-evolution files: group the scan by
@@ -1609,16 +1603,8 @@ object VersionedTable {
       // their physical values (NULL included). Scan-level pseudo
       // columns (file identity, row position) materialize INSIDE each
       // branch — they cannot resolve above a union.
-      val posNeeded = dvs.nonEmpty &&
-        dvSchemaOf(spark, dvs).fieldNames.contains(PosCol)
       def scanCols(df: DataFrame): DataFrame =
-        if (dvs.isEmpty) df
-        else {
-          val d = df.withColumn(FileCol, normFileExpr)
-          if (posNeeded) d.withColumn(PosCol,
-            org.apache.spark.sql.functions.col("_metadata.row_index"))
-          else d
-        }
+        if (dvs.isEmpty) df else withRowId(df)
       val renames = renameMapOf(lines) // logical -> physical
       val physDefault = defaults.map { case (lg, d) =>
         renames.getOrElse(lg, lg) -> d }
@@ -1662,27 +1648,26 @@ object VersionedTable {
     org.apache.spark.sql.GraftSqlShims.column(mapped)
   }
 
+  /** `df` plus the row identity tombstones key on: [[FileCol]] and
+    * [[PosCol]], the row's ordinal from the parquet reader's
+    * `_metadata.row_index`. Scan-level pseudo columns — they cannot
+    * resolve above a union. */
+  private def withRowId(df: DataFrame): DataFrame =
+    df.withColumn(FileCol, normFileExpr).withColumn(PosCol,
+      org.apache.spark.sql.functions.col("_metadata.row_index"))
+
   /** Apply a snapshot's deletion-vector sidecars to `base` (which must
-    * already carry [[FileCol]]): one broadcast (file, key…) anti-join —
-    * O(deleted rows) broadcast, zero shuffle of the data side. A
-    * POSITIONAL sidecar (keyed [[PosCol]]) has no table key columns to
-    * join on; the row's file ordinal is materialized from the parquet
-    * reader's `_metadata.row_index` just for the join and dropped
-    * after — data files are immutable, so positions never shift. */
+    * already carry [[withRowId]]'s columns): one broadcast (file,
+    * position) anti-join — O(deleted rows) broadcast, zero shuffle of
+    * the data side. Data files are immutable, so positions never
+    * shift, and tombstones name PHYSICAL file rows, so they survive
+    * any later rename or drop of a column. */
   private def applyTombstones(spark: SparkSession, base: DataFrame,
                               dvs: Seq[String],
-                              sizes: String => Option[Long]): DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast, col}
-    if (dvs.isEmpty) return base
-    val tomb = dvFrame(spark, dvs, sizes)
-    val keyCols = tomb.columns.filterNot(_ == FileCol).toSeq
-    val needPos = keyCols.contains(PosCol) && !base.columns.contains(PosCol)
-    val joined =
-      (if (needPos) base.withColumn(PosCol, col("_metadata.row_index"))
-       else base)
-        .join(broadcast(tomb), FileCol +: keyCols, "left_anti")
-    if (needPos) joined.drop(PosCol) else joined
-  }
+                              sizes: String => Option[Long]): DataFrame =
+    if (dvs.isEmpty) base
+    else base.join(org.apache.spark.sql.functions.broadcast(
+      dvFrame(spark, dvs, sizes)), Seq(FileCol, PosCol), "left_anti")
 
   /** Reconcile a snapshot read with the DECLARED schema (sc line):
     * a column added metadata-only ([[addColumnCommit]]) exists in no
@@ -1714,28 +1699,27 @@ object VersionedTable {
     * deletion-vector / Iceberg positional-delete pattern: instead of
     * rewriting every file that holds a matching row (copy-on-write,
     * which turns a 3-row delete on a 1 GB file into a 1 GB write),
-    * the matching rows' `(file, key)` identities are written to a
-    * small tombstone sidecar and the new manifest references it. Data
-    * files are untouched; [[read]] applies the tombstones as a
-    * broadcast anti-join. A later [[mergeCommit]] that rewrites a
-    * file purges its tombstones (the rewrite starts from the LOGICAL
-    * rows), re-consolidating toward pure files.
+    * the matching rows' `(file, position)` identities ([[PosCol]] =
+    * the row's parquet ordinal, stable because data files are
+    * immutable) are written to a small tombstone sidecar and the new
+    * manifest references it. Data files are untouched; [[read]]
+    * applies the tombstones as a broadcast anti-join. A later
+    * [[mergeCommit]] that rewrites a file purges its tombstones (the
+    * rewrite starts from the LOGICAL rows), re-consolidating toward
+    * pure files; `purge_tombstones` / OPTIMIZE pay the debt down.
     *
-    * `keyCols` must identify rows uniquely WITHIN each data file
-    * (table-unique keys, the same precondition [[mergeCommit]]
-    * documents); a duplicated key inside one file would take its
-    * twin down with it. All deletes on one table must use the SAME
-    * key columns (enforced against the live sidecars): the read-side
-    * anti-join matches tombstones by one key schema, and a sidecar
-    * keyed differently would read as NULL keys and silently match
-    * nothing. Tombstones for rows already deleted by an earlier
-    * sidecar are not re-emitted (the predicate runs on the logical
-    * snapshot). Returns the new version; a predicate matching nothing
-    * still commits (empty-sidecar-free: no dv line added). */
+    * No key columns are needed — rows are told apart by position, so
+    * duplicate keys inside one file are safe — and every delete
+    * composes with every earlier one, SQL merge-on-read DML included
+    * (one sidecar schema). Tombstones for rows already deleted are
+    * not re-emitted (the predicate runs on the logical snapshot).
+    * `preds` prune the doomed scan to [[scanCandidates]] and are ANDed
+    * into the predicate. Returns the new version; a predicate
+    * matching nothing still commits (no dv line added). */
   def deleteCommit(spark: SparkSession, table: String,
                    predicate: org.apache.spark.sql.Column,
-                   keyCols: Seq[String]): Int =
-    try deleteCommitAttempt(spark, table, predicate, keyCols, _ => ())
+                   preds: Seq[ScanPred] = Nil): Int =
+    try deleteCommitAttempt(spark, table, predicate, preds, _ => ())
     catch { case c: VersionConflict => sys.error(c.getMessage) }
 
   /** [[deleteCommit]] with FILE SKIPPING on the doomed-row scan: the
@@ -1744,20 +1728,16 @@ object VersionedTable {
     * retention delete (`ts < cutoff`) on a 100 TB time-clustered table
     * must tombstone from O(old files) of reads, not a table scan
     * (the same min/max discipline [[readPruned]] applies to reads and
-    * [[mergeCommit]] to touched-file probes). Falls back to one
-    * on-the-fly stats scan when the manifest doesn't cover the range
-    * columns; row-identical to
+    * [[mergeCommit]] to touched-file probes). Files the manifest does
+    * not cover stay candidates; row-identical to
     * `deleteCommit(ranges AND predicate)` either way — min/max
     * intersection is necessary, never sufficient, so excluded files
     * provably hold no matching row. Pass `lit(true)` as `predicate`
     * for a pure range delete. */
   def deleteCommitPruned(spark: SparkSession, table: String,
                          ranges: Seq[(String, Long, Long)],
-                         predicate: org.apache.spark.sql.Column,
-                         keyCols: Seq[String]): Int =
-    try deleteCommitAttempt(spark, table, predicate, keyCols, _ => (),
-      pruneRanges = ranges)
-    catch { case c: VersionConflict => sys.error(c.getMessage) }
+                         predicate: org.apache.spark.sql.Column): Int =
+    deleteCommit(spark, table, predicate, rangePreds(ranges))
 
   /** [[deleteCommit]] with optimistic concurrency — same conflict
     * re-evaluation as [[mergeCommitOptimistic]]: a concurrent commit
@@ -1768,92 +1748,80 @@ object VersionedTable {
     * seam of [[mergeCommitOptimistic]]. */
   def deleteCommitOptimistic(
       spark: SparkSession, table: String,
-      predicate: org.apache.spark.sql.Column, keyCols: Seq[String],
+      predicate: org.apache.spark.sql.Column,
       maxRetries: Int = 5, onAttempt: Int => Unit = _ => ()): Int =
     retryReadModifyWrite(spark, table, maxRetries, "delete") { hook =>
-      deleteCommitAttempt(spark, table, predicate, keyCols, hook)
+      deleteCommitAttempt(spark, table, predicate, Nil, hook)
     }(onAttempt)
 
   private def deleteCommitAttempt(spark: SparkSession, table: String,
                                   predicate: org.apache.spark.sql.Column,
-                                  keyCols: Seq[String],
-                                  onAttempt: Int => Unit,
-                                  pruneRanges: Seq[(String, Long, Long)] =
-                                    Nil): Int = {
-    import org.apache.spark.sql.functions.col
+                                  preds: Seq[ScanPred],
+                                  onAttempt: Int => Unit): Int = {
     val vs = versions(spark, table)
     require(vs.nonEmpty, s"no committed versions in $table")
     val lines = readManifest(spark, table, vs.last)
+    val data = dataFilesOf(lines)
     // a file-less snapshot (TRUNCATE / freshly created): nothing can
     // match — the delete is a no-op, no version published
-    if (dataFilesOf(lines).isEmpty) return vs.last
-    val liveDvs = dvFilesOf(lines)
-    if (liveDvs.nonEmpty) {
-      val existing = dvSchemaOf(spark, liveDvs).fieldNames
-        .filterNot(_ == FileCol).toSet
-      require(existing == toPhysicalCols(lines, keyCols).toSet,
-        s"table's live tombstones are keyed by $existing; a delete " +
-          s"keyed by $keyCols would not compose — use the same key " +
-          "columns (or mergeCommit/compactCommit to purge first)")
-    }
-    // file skipping for the doomed scan ([[deleteCommitPruned]]): only
-    // the ranges' candidate files can hold a matching row — the rest
-    // are never opened. `lines` keeps only candidate data lines (dv
-    // sidecars stay: tombstones must keep composing on the files read)
+    if (data.isEmpty) return vs.last
+    // file skipping for the doomed scan: only candidate files can hold
+    // a matching row (dv sidecars stay: tombstones must keep composing
+    // on the files read)
     val scanLines =
-      if (pruneRanges.isEmpty) lines
-      else {
-        val data = dataFilesOf(lines)
-        val rangeCols = pruneRanges.map(_._1).distinct
-        val stats = manifestStats(spark, lines, rangeCols,
-          _ => org.apache.spark.sql.types.DoubleType).getOrElse {
-          statsScanNotifier("deleteCommit", data.size)
-          collectStatsLogical(spark, data, rangeCols, lines)
-        }
-        val cand = FileSkipping.candidateFiles(stats, pruneRanges)
-        deletePruneNotifier(cand.size, data.size)
-        cand ++ lines.filter(l =>
+      if (preds.isEmpty) lines
+      else scanCandidates(lines, preds) ++ lines.filter(l =>
         l.startsWith(DvPrefix) || l.startsWith(CmPrefix) ||
-        l.startsWith(FzPrefix) ||
-        l.startsWith(ScPrefix))
-      }
-    val rangePred = pruneRanges
-      .map { case (c, lo, hi) => col(c) >= lo && col(c) <= hi }
-      .foldLeft(predicate)(_ && _)
-    val doomed = toPhysicalDf(
-      (if (dataFilesOf(scanLines).isEmpty)
-        readSnapshotTagged(spark, lines).limit(0)
-      else readSnapshotTagged(spark, scanLines))
-        .filter(rangePred)
-        .select(FileCol, keyCols: _*), lines) // sidecar keys: PHYSICAL
-    val next = vs.last + 1
+          l.startsWith(FzPrefix) || l.startsWith(ScPrefix))
+    val scanned = dataFilesOf(scanLines).size
+    deletePruneNotifier(scanned, data.size)
+    val doomed =
+      if (scanned == 0) None
+      else Some(readSnapshotTaggedWithPos(spark, scanLines)
+        .filter(predicate && predExpr(preds)).select(FileCol, PosCol))
+    publishTombstones(spark, table, lines, doomed, vs.last, onAttempt)
+  }
+
+  /** The one tombstone writer: the doomed `(file, position)`
+    * identities as ONE sidecar file under the next version's data dir
+    * (tombstones are tiny — one file keeps the manifest and the
+    * read-side broadcast compact), every carried line plus the new dv
+    * line re-published. An empty doomed set still commits (carry-all —
+    * one logical op, one version). A lost publish race throws
+    * [[VersionConflict]] naming the files the tombstones target, so
+    * [[retryReadModifyWrite]] covers every delete. */
+  private def publishTombstones(spark: SparkSession, table: String,
+                                lines: Seq[String],
+                                doomed: Option[DataFrame], head: Int,
+                                onAttempt: Int => Unit): Int = {
+    val next = head + 1
     val dvDir = new Path(table,
       s"data/$next-dv-${java.util.UUID.randomUUID().toString.take(8)}")
-    // tombstones are tiny — one file keeps the manifest and the
-    // read-side broadcast compact
-    stagedWriter(doomed.coalesce(1)).parquet(dvDir.toString)
-    val f = fs(spark, dvDir)
-    val dvFiles = f.listStatus(dvDir).toSeq.map(_.getPath)
-      .filter(_.getName.endsWith(".parquet"))
-    val hasRows = footerRowCount(spark, dvFiles) > 0
-    val dvLines =
-      if (hasRows) dvFiles.map(p => DvPrefix + p.toString)
-      else { f.delete(dvDir, true); Seq.empty }
+    val dvFiles = doomed match {
+      case None => Seq.empty[String]
+      case Some(df) =>
+        stagedWriter(df.coalesce(1)).parquet(dvDir.toString)
+        val f = fs(spark, dvDir)
+        val files = f.listStatus(dvDir).toSeq.map(_.getPath)
+          .filter(_.getName.endsWith(".parquet"))
+        if (footerRowCount(spark, files) > 0) files.map(_.toString)
+        else { f.delete(dvDir, true); Seq.empty }
+    }
     onAttempt(next)
     // metadata describes its own commit — never carried (same rule as
     // commit's carry path)
     try writeManifest(spark, table, next,
       lines.filterNot(_.startsWith(MetaPrefix)) ++ specDeclLines(lines) ++
-        dvLines)
+        dvFiles.map(DvPrefix + _))
     catch { case e: RuntimeException
         if e.getMessage != null && e.getMessage.contains("already committed") =>
       // the conflict's touched set = the files these tombstones target
       // (O(deleted rows) sidecar read, only paid on the loss path)
       val tombstoned =
-        if (!hasRows) Set.empty[String]
-        else dvFileColFrame(spark, dvFiles.map(_.toString), _ => None)
+        if (dvFiles.isEmpty) Set.empty[String]
+        else dvFileColFrame(spark, dvFiles, _ => None)
           .distinct().collect().map(r => norm(r.getString(0))).toSet
-      throw VersionConflict(vs.last, tombstoned, e.getMessage)
+      throw VersionConflict(head, tombstoned, e.getMessage)
     }
     next
   }
@@ -1973,91 +1941,6 @@ object VersionedTable {
     catch { case c: VersionConflict => sys.error(c.getMessage) }
   }
 
-  /** MERGE-ON-READ DELETE by predicate — NO key columns needed: the
-    * matched rows' `(file, position)` identities land in a
-    * deletion-vector sidecar ([[PosCol]] = the row's parquet ordinal,
-    * stable because data files are immutable) and every data file
-    * carries verbatim. A point DELETE commits O(matched rows) of
-    * sidecar where [[deleteCommitWhere]] (copy-on-write) rewrites
-    * O(matched file BYTES) — the Delta-DV / Iceberg-positional-delete
-    * trade: reads pay a broadcast anti-join until `purge_tombstones` /
-    * OPTIMIZE consolidates the debt. `preds` prune the doomed scan by
-    * the full [[ScanPred]] language, same as the COW paths. Composes
-    * with earlier positional deletes (positions name original-file
-    * rows, and already-dead rows are filtered before the scan);
-    * refuses when live sidecars are keyed by table columns — the read
-    * applies ONE tombstone key schema per table. */
-  def deleteCommitPositional(spark: SparkSession, table: String,
-                             predicate: org.apache.spark.sql.Column,
-                             preds: Seq[ScanPred] = Nil): Int = {
-    val vs = versions(spark, table)
-    require(vs.nonEmpty, s"no committed versions in $table")
-    val lines = readManifest(spark, table, vs.last)
-    val liveDvs = dvFilesOf(lines)
-    if (liveDvs.nonEmpty) {
-      val existing = dvSchemaOf(spark, liveDvs).fieldNames
-        .filterNot(_ == FileCol).toSet
-      require(existing == Set(PosCol),
-        s"table's live tombstones are keyed by $existing; a positional " +
-          "delete would not compose — purge_tombstones (or " +
-          "compactCommit) first, or keep deleting by those keys")
-    }
-    val data = dataFilesOf(lines)
-    // a file-less snapshot (TRUNCATE / freshly created): nothing can
-    // match — the DELETE is a no-op, no version published
-    if (data.isEmpty) return vs.last
-    val scanLines =
-      if (preds.isEmpty) lines
-      else scanCandidates(lines, preds) ++ dvLinesOf(lines) ++
-        cmLinesOf(lines) ++ scLinesOf(lines)
-    deletePruneNotifier(dataFilesOf(scanLines).size, data.size)
-    val effPred =
-      if (preds.isEmpty) predicate else predicate && predExpr(preds)
-    val doomed =
-      if (dataFilesOf(scanLines).isEmpty) None
-      else Some(readSnapshotTaggedWithPos(spark, scanLines)
-        .filter(effPred).select(FileCol, PosCol))
-    publishTombstoneCommit(spark, table, lines, doomed, vs.last)
-  }
-
-  /** Shared positional/keyed tombstone publish tail: write the doomed
-    * identities as ONE sidecar file under the next version's data dir,
-    * re-publish every carried line plus the new dv line. An empty
-    * doomed set still commits (carry-all — one logical op, one
-    * version). */
-  private def publishTombstoneCommit(spark: SparkSession, table: String,
-                                     lines: Seq[String],
-                                     doomed: Option[DataFrame],
-                                     head: Int): Int = {
-    val next = head + 1
-    val dvDir = new Path(table,
-      s"data/$next-dv-${java.util.UUID.randomUUID().toString.take(8)}")
-    val dvLines = doomed match {
-      case None => Seq.empty[String]
-      case Some(df) =>
-        // tombstones are tiny — one file keeps the manifest and the
-        // read-side broadcast compact
-        stagedWriter(df.coalesce(1)).parquet(dvDir.toString)
-        val f = fs(spark, dvDir)
-        val files = f.listStatus(dvDir).toSeq.map(_.getPath)
-          .filter(_.getName.endsWith(".parquet"))
-        if (footerRowCount(spark, files) > 0)
-          files.map(p => DvPrefix + p.toString)
-        else { f.delete(dvDir, true); Seq.empty }
-    }
-    try writeManifest(spark, table, next,
-      lines.filterNot(_.startsWith(MetaPrefix)) ++ specDeclLines(lines) ++
-        dvLines)
-    catch { case e: RuntimeException
-        if e.getMessage != null &&
-          e.getMessage.contains("already committed") =>
-      sys.error(s"version conflict on $table: the delete planned " +
-        s"against v$head but a concurrent commit took v$next — " +
-        "re-run the delete")
-    }
-    next
-  }
-
   /** Test seam: fired `(chosenMode, matchedRows, matchedFileRows)` by
     * [[deleteCommitRouted]] after its routing decision — what specs
     * pin to prove a point DELETE goes merge-on-read (zero parquet
@@ -2116,15 +1999,14 @@ object VersionedTable {
     *
     *  - table property `write.delete.mode = 'copy-on-write'` →
     *    [[deleteCommitWherePruned]] (rewrite matched files);
-    *  - `= 'merge-on-read'` → [[deleteCommitPositional]] (sidecar
+    *  - `= 'merge-on-read'` → [[deleteCommit]] (positional sidecar
     *    tombstones, zero data rewrites);
     *  - unset / `'auto'` → COST-BASED: one pruned probe counts the
     *    matched rows per file; when they are a small fraction
     *    (≤ 10%) of the matched files' total rows (manifest st
     *    nrows — zero extra I/O), a rewrite would copy ≥ 10× the
     *    bytes it deletes, so the delete goes merge-on-read; bulk
-    *    deletes (or tables without st coverage, or tables whose live
-    *    sidecars are keyed by table columns) stay copy-on-write. The
+    *    deletes (or tables without st coverage) stay copy-on-write. The
     *    probe is never paid twice: the COW branch reuses its matched
     *    set (the rewrite skips its own probe), the MOR branch re-reads
     *    only the matched files for their row positions.
@@ -2150,7 +2032,7 @@ object VersionedTable {
         cow(None)
       case Some("merge-on-read") =>
         deleteModeNotifier("merge-on-read", -1L, -1L)
-        deleteCommitPositional(spark, table, predicate, preds)
+        deleteCommit(spark, table, predicate, preds)
       case Some(other) if other != "auto" =>
         sys.error(s"unknown $DeleteModeProp '$other' on $table — " +
           "use 'copy-on-write', 'merge-on-read' or 'auto'")
@@ -2161,12 +2043,8 @@ object VersionedTable {
         val lines = readManifest(spark, table, head)
         val rowCounts = manifestRowCounts(lines)
         val liveDvs = dvFilesOf(lines)
-        val posCompatible = liveDvs.isEmpty ||
-          dvSchemaOf(spark, liveDvs).fieldNames
-            .filterNot(_ == FileCol).toSet == Set(PosCol)
-        if (rowCounts.isEmpty || !posCompatible) {
-          // no O(files) row counts to decide from (or the sidecar key
-          // schema forbids positional) — today's behavior, one probe
+        if (rowCounts.isEmpty) {
+          // no O(files) row counts to decide from — one COW probe
           deleteModeNotifier("copy-on-write", -1L, -1L)
           cow(None)
         } else {
@@ -2235,8 +2113,9 @@ object VersionedTable {
                   scLinesOf(lines)
               val doomed = readSnapshotTaggedWithPos(spark, matchedLines)
                 .filter(effPred).select(FileCol, PosCol)
-              publishTombstoneCommit(spark, table, lines, Some(doomed),
-                head)
+              try publishTombstones(spark, table, lines, Some(doomed),
+                head, _ => ())
+              catch { case c: VersionConflict => sys.error(c.getMessage) }
             } else {
               deleteModeNotifier("copy-on-write", matchedRows,
                 matchedFileRows)
@@ -2616,7 +2495,6 @@ object VersionedTable {
   private def readSnapshotTaggedImpl(spark: SparkSession,
                                      lines: Seq[String],
                                      withPos: Boolean): DataFrame = {
-    import org.apache.spark.sql.functions.col
     val data = dataFilesOf(lines)
     require(data.nonEmpty, "manifest lists no data files")
     val dvs = dvFilesOf(lines)
@@ -2626,16 +2504,11 @@ object VersionedTable {
     val nc =
       if (defaults.isEmpty) Map.empty[String, Set[String]]
       else ncTagsOf(lines)
-    // positional tombstones join on the row's file ordinal, which can
-    // only materialize at SCAN level — inside each era branch, never
-    // above the union
-    val posNeeded = withPos || (nc.nonEmpty && dvs.nonEmpty &&
-      dvSchemaOf(spark, dvs).fieldNames.contains(PosCol))
-    def scanCols(df: DataFrame): DataFrame = {
-      val d = df.withColumn(FileCol, normFileExpr)
-      if (posNeeded) d.withColumn(PosCol, col("_metadata.row_index"))
-      else d
-    }
+    // the row ordinal can only materialize at SCAN level — inside each
+    // era branch, never above the union
+    def scanCols(df: DataFrame): DataFrame =
+      if (withPos || dvs.nonEmpty) withRowId(df)
+      else df.withColumn(FileCol, normFileExpr)
     val base =
       if (nc.isEmpty) scanCols(baseSnapshotRead(spark, lines, data))
       else {
@@ -2655,8 +2528,7 @@ object VersionedTable {
       }
     val afterDv = applyTombstones(spark, base, dvs, fzLookup(lines))
     widenToDeclared(applyMapping(
-      if (posNeeded && !withPos) afterDv.drop(PosCol) else afterDv,
-      lines), lines)
+      if (withPos) afterDv else afterDv.drop(PosCol), lines), lines)
   }
 
   /** [[readSnapshotTagged]] also carrying [[PosCol]], the row's
@@ -6537,8 +6409,7 @@ object VersionedTable {
     * in the already-written files (and old versions still read it —
     * cm lines are versioned) but no current-version read surfaces it,
     * and its st stats stop serving. Refused for partition-spec
-    * columns (pruning and dynamic overwrite key off them), dv
-    * sidecar key columns (the anti-join needs them), and
+    * columns (pruning and dynamic overwrite key off them) and
     * constraint-referenced columns. Later appends may NOT reuse the
     * dropped column's name-as-physical — [[schemaConflictsWithTable]]
     * rejects the collision (two generations of one physical name
@@ -6757,13 +6628,6 @@ object VersionedTable {
       t._1.startsWith(s"__bucket_${physCol}_") ||
         t._1.startsWith(s"__part_div_${physCol}_")),
       s"'$colName' keys a bucket/transform spec — rewrite first")
-    val dvs = dvFilesOf(lines)
-    if (dvs.nonEmpty) {
-      val physical = renameMapOf(lines).getOrElse(colName, colName)
-      require(!dvSchemaOf(spark, dvs).fieldNames.contains(physical),
-        s"'$colName' keys the live deletion vectors — compactCommit " +
-          "to purge tombstones before dropping")
-    }
     constraintRefs(spark, table).get(colName).foreach(c => sys.error(
       s"CHECK constraint '$c' references '$colName' — drop it first"))
     val renames = renameMapOf(lines)

@@ -110,7 +110,7 @@ object IncrementalIngest {
     * resurrection bug; the parity-split gate fails the hash on it).
     * Readers filter `__deleted`; once a stream is retired (or
     * retention guarantees no older events can still arrive), one
-    * `deleteCommit(col("__deleted"), Seq(keyCol))` purges the
+    * `deleteCommit(col("__deleted"))` purges the
     * tombstones for good.
     *
     * The first batch creates the table with `keyCol` declared as a

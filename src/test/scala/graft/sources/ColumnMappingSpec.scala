@@ -92,7 +92,7 @@ class ColumnMappingSpec extends SparkSpec {
     assert(VersionedTable.read(spark, t).filter(col("k") === 6L)
       .select("cents").as[Long].head() == 61L)
     // DV delete keyed on k; renamed column must not resurface the row
-    VersionedTable.deleteCommit(spark, t, col("cents") === 70L, Seq("k"))
+    VersionedTable.deleteCommit(spark, t, col("cents") === 70L)
     assert(VersionedTable.read(spark, t).filter(col("k") === 7L).count() == 0)
     // OPTIMIZE keeps the mapping alive
     VersionedTable.compactCommit(spark, t, targetRows = 1000L)
@@ -136,7 +136,7 @@ class ColumnMappingSpec extends SparkSpec {
     assert(VersionedTable.versions(spark, t).last == v)
   }
 
-  test("drop guards: partition column, dv key, constraint reference, last column") {
+  test("drop guards: partition and constraint columns, not dv rows") {
     val tp = fresh("vcmgp")
     VersionedTable.commitPartitioned(spark, tp,
       (1L to 10L).map(k => (k, s"p${k % 2}")).toDF("k", "par"), "par",
@@ -146,10 +146,12 @@ class ColumnMappingSpec extends SparkSpec {
     }
     val td = fresh("vcmgd")
     seed(td)
-    VersionedTable.deleteCommit(spark, td, col("k") === 1L, Seq("k"))
-    intercept[IllegalArgumentException] {
-      VersionedTable.dropColumnCommit(spark, td, "k")
-    }
+    // tombstones name file rows, not columns: the delete's predicate
+    // column drops freely and the deleted row stays dead
+    VersionedTable.deleteCommit(spark, td, col("k") === 1L)
+    VersionedTable.dropColumnCommit(spark, td, "k")
+    assert(VersionedTable.read(spark, td).select("amount").as[Long]
+      .collect().sorted.toSeq == (2L to 100L).map(_ * 10))
     val tc = fresh("vcmgc")
     seed(tc)
     VersionedTable.addConstraint(spark, tc, "amt_pos", "amount > 0")

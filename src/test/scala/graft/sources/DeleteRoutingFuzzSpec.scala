@@ -48,7 +48,7 @@ class DeleteRoutingFuzzSpec extends SparkSpec {
           // plant merge-on-read debt: tombstoned files must never be
           // trusted as stats-contained
           val m = 23 + rnd.nextInt(40)
-          VersionedTable.deleteCommitPositional(spark, t,
+          VersionedTable.deleteCommit(spark, t,
             col("k") % m === 0)
           live = live.filterNot(_ % m == 0)
         }

@@ -7,13 +7,14 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 
-/** The dv-sidecar metadata reads ([[VersionedTable.dvSchemaOf]] and the
-  * FileCol-only sidecar frame behind [[VersionedTable.changedFiles]]):
-  * the footer fast-path returns exactly what schema inference would,
-  * falls back to inference when the Spark metadata key is absent, and
-  * the fixed one-column FileCol read unions sidecar GENERATIONS with
-  * different key schemas (keyed vs positional) — the case a snapshot
-  * diff across a purge boundary hits. */
+/** The dv-sidecar reads: every sidecar is read with the one fixed
+  * `(__gf, __gpos)` schema (no footer open, no inference), so a
+  * legacy key-keyed sidecar — `(__gf, key…)`, written by an older
+  * build — must fail the read loudly instead of reading as NULL
+  * positions and silently resurrecting its rows; the FileCol-only
+  * sidecar frame behind [[VersionedTable.changedFiles]] unions sidecar
+  * generations across a purge; and sized sidecars plan with zero
+  * getFileStatus calls. */
 class DvSidecarReadSpec extends SparkSpec {
   import spark.implicits._
 
@@ -29,70 +30,55 @@ class DvSidecarReadSpec extends SparkSpec {
   private def dvFiles(t: String, v: Int): Seq[String] =
     VersionedTable.dvFilesOf(VersionedTable.manifest(spark, t, v))
 
-  test("dvSchemaOf footer fast-path == schema inference, keyed and positional") {
-    val t = freshTable()
-    seed(t)
-    VersionedTable.deleteCommit(spark, t, col("k") <= 5, Seq("k"))
-    val keyed = dvFiles(t, 2)
-    assert(keyed.nonEmpty)
-    assert(VersionedTable.dvSchemaOf(spark, keyed).fields.toSeq
-      .map(f => (f.name, f.dataType)) ==
-      spark.read.parquet(keyed: _*).schema.fields.toSeq
-        .map(f => (f.name, f.dataType)),
-      "footer-served schema must equal the inference read's, keyed dvs")
+  private def msgs(x: Throwable): Seq[String] =
+    Option(x).toSeq.flatMap(e =>
+      Option(e.getMessage).toSeq ++ msgs(e.getCause))
 
-    val t2 = freshTable()
-    seed(t2)
-    VersionedTable.deleteCommitPositional(spark, t2, col("k") % 50 === 0)
-    val pos = dvFiles(t2, 2)
-    assert(pos.nonEmpty)
-    assert(VersionedTable.dvSchemaOf(spark, pos).fields.toSeq
-      .map(f => (f.name, f.dataType)) ==
-      spark.read.parquet(pos: _*).schema.fields.toSeq
-        .map(f => (f.name, f.dataType)),
-      "footer-served schema must equal the inference read's, positional dvs")
-  }
-
-  test("dvSchemaOf falls back to inference when the metadata key is absent") {
-    val t = freshTable()
-    seed(t)
-    VersionedTable.deleteCommit(spark, t, col("k") <= 5, Seq("k"))
-    val src = dvFiles(t, 2).head
-    val conf = spark.sparkContext.hadoopConfiguration
-    // rewrite the sidecar via parquet-mr's row-group append, dropping
-    // every key-value metadata entry — a non-Spark writer's footer
-    val dir = Files.createTempDirectory("vdvnometa").toString
-    val out = new Path(dir, "nometa.parquet")
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile
-      .fromPath(new Path(src), conf)
-    val rd = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-    val msgType =
-      try rd.getFooter.getFileMetaData.getSchema finally rd.close()
-    val w = new org.apache.parquet.hadoop.ParquetFileWriter(
-      org.apache.parquet.hadoop.util.HadoopOutputFile.fromPath(out, conf),
-      msgType, org.apache.parquet.hadoop.ParquetFileWriter.Mode.CREATE,
-      134217728L, 8388608)
-    w.start(); w.appendFile(in)
-    w.end(java.util.Collections.emptyMap[String, String]())
-    val got = VersionedTable.dvSchemaOf(spark, Seq(out.toString))
-    assert(got.fieldNames.toSeq ==
-      spark.read.parquet(out.toString).schema.fieldNames.toSeq,
-      "metadata-less footer must land in the inference fallback " +
-        "and still answer exactly")
-  }
-
-  test("changedFiles unions mixed-generation sidecars (keyed, then positional)") {
+  test("a legacy key-keyed sidecar fails reads loudly, resurrects no row") {
     val t = freshTable()
     seed(t) // v1
-    VersionedTable.deleteCommit(spark, t, col("k") <= 100, Seq("k")) // v2: keyed dv
+    val lines = VersionedTable.manifest(spark, t, 1)
+    val f0 = VersionedTable.dataFilesOf(lines).head
+    val doomed = spark.read.parquet(f0).select("k").as[Long]
+      .collect().sorted.take(3).toSeq
+    assert(doomed.size == 3)
+    // an older build's keyed delete: `(__gf, k)` rows, published by a
+    // manifest exactly as that build's deleteCommit did
+    val dir = new Path(t, "data/2-dv-legacy").toString
+    doomed.map(k => (VersionedTable.norm(f0), k)).toDF("__gf", "k")
+      .coalesce(1).write.parquet(dir)
+    val side = new Path(dir).getFileSystem(
+      spark.sparkContext.hadoopConfiguration).listStatus(new Path(dir))
+      .map(_.getPath.toString).filter(_.endsWith(".parquet")).toSeq
+    assert(side.size == 1)
+    VersionedTable.writeManifest(spark, t, 2, lines ++ side.map("dv\t" + _))
+    def refused(what: String)(body: => Any): Unit = {
+      val e = intercept[Exception](body)
+      assert(msgs(e).exists(m => m.contains("__gpos") &&
+        m.contains("older build")), s"$what: ${msgs(e).mkString(" | ")}")
+    }
+    refused("collect")(VersionedTable.read(spark, t).collect())
+    refused("count")(VersionedTable.read(spark, t).count())
+    refused("doomed-key lookup")(VersionedTable.read(spark, t)
+      .filter(col("k").isin(doomed: _*)).collect())
+    refused("compaction")(VersionedTable.compactCommit(spark, t, 10000L))
+    assert(VersionedTable.versions(spark, t) == Seq(1, 2),
+      "a refused rewrite must publish nothing")
+    // the pre-delete snapshot stays readable
+    assert(VersionedTable.read(spark, t, Some(1)).count() == 400L)
+  }
+
+  test("changedFiles unions sidecar generations across a purge") {
+    val t = freshTable()
+    seed(t) // v1
+    VersionedTable.deleteCommit(spark, t, col("k") <= 100) // v2: dv
     VersionedTable.purgeTombstonesCommit(spark, t, 200L) // v3: dvs purged
-    VersionedTable.deleteCommitPositional(spark, t,
-      col("k") % 7 === 0) // v4: positional dv
-    val keyed = dvFiles(t, 2); val pos = dvFiles(t, 4)
-    assert(keyed.nonEmpty && pos.nonEmpty)
-    assert(VersionedTable.dvSchemaOf(spark, keyed).fieldNames.toSet !=
-      VersionedTable.dvSchemaOf(spark, pos).fieldNames.toSet,
-      "fixture must actually cross two dv key-schema generations")
+    VersionedTable.deleteCommit(spark, t,
+      col("k") % 7 === 0) // v4: a new dv generation
+    val first = dvFiles(t, 2); val second = dvFiles(t, 4)
+    assert(first.nonEmpty && second.nonEmpty)
+    assert(first.toSet.intersect(second.toSet).isEmpty,
+      "fixture must actually cross two sidecar generations")
     // the feed across the generations must equal the brute-force
     // multiset diff of the two snapshots
     val changes = VersionedTable.readChanges(spark, t, 2, 4)
@@ -122,7 +108,7 @@ class DvSidecarReadSpec extends SparkSpec {
   test("sized sidecars plan with ZERO getFileStatus calls (fz-fed dv reads)") {
     val t = freshTable()
     seed(t)
-    VersionedTable.deleteCommitPositional(spark, t, col("k") % 50 === 0)
+    VersionedTable.deleteCommit(spark, t, col("k") % 50 === 0)
     val lines = VersionedTable.manifest(spark, t,
       VersionedTable.versions(spark, t).last)
     val sizes = VersionedTable.fileSizesOf(lines)

@@ -289,7 +289,7 @@ class GraftCatalogDdlSpec extends SparkSpec {
     val t = s"$warehouse/v1"
     // keyed delete on zero files: no-op, no crash, no version
     val head0 = VersionedTable.versions(spark, t).last
-    VersionedTable.deleteCommit(spark, t, col("k") === 1L, Seq("k"))
+    VersionedTable.deleteCommit(spark, t, col("k") === 1L)
     assert(VersionedTable.versions(spark, t).last == head0)
     // library mergeCommit into the file-less snapshot: all inserts,
     // and the rewrite re-tags from the declared spec

@@ -108,7 +108,7 @@ class GraftCatalogSpec extends SparkSpec {
 
   test("deletion vectors and column mapping flow through SQL") {
     val t = seed("tf")
-    VersionedTable.deleteCommit(spark, t, col("k") === 5L, Seq("k"))
+    VersionedTable.deleteCommit(spark, t, col("k") === 5L)
     VersionedTable.renameColumnCommit(spark, t, "amount", "cents")
     assert(spark.sql("SELECT count(*) FROM gt.tf").as[Long].head() == 99L)
     assert(spark.sql("SELECT sum(cents) FROM gt.tf").as[Long].head() ==
@@ -622,18 +622,30 @@ class GraftCatalogSpec extends SparkSpec {
     assert(e2.getMessage.contains("k_pos"), e2.getMessage)
     assert(VersionedTable.constraintsOf(spark, t).isEmpty,
       "the in-sequence ADD CONSTRAINT must not have landed either")
-    // dropping a deletion-vector key column rejects UPFRONT, before
-    // any earlier change in the statement commits
-    VersionedTable.deleteCommit(spark, t, col("k") === 5L, Seq("k"))
+    // dropping a partition column rejects UPFRONT, before any earlier
+    // change in the statement commits
+    val tp = s"$warehouse/tavp"
+    VersionedTable.commitPartitioned(spark, tp,
+      (1L to 20L).map(k => (k, s"s${k % 3}")).toDF("k", "tag"), "tag",
+      append = false)
     val e3 = intercept[Exception] {
-      cat.alterTable(ident,
+      cat.alterTable(org.apache.spark.sql.connector.catalog.Identifier
+        .of(Array.empty[String], "tavp"),
         TableChange.addColumn(Array("extra2"),
           org.apache.spark.sql.types.LongType, true),
-        TableChange.deleteColumn(Array("k"), null))
+        TableChange.deleteColumn(Array("tag"), null))
     }
-    assert(e3.getMessage.contains("deletion vectors"), e3.getMessage)
-    assert(!VersionedTable.read(spark, t).schema.fieldNames
+    assert(e3.getMessage.contains("partition column"), e3.getMessage)
+    assert(!VersionedTable.read(spark, tp).schema.fieldNames
       .contains("extra2"), "no half-applied ALTER")
+    // a deletion vector pins no column: DROP COLUMN k after an API
+    // delete commits, and the deleted row stays dead
+    VersionedTable.deleteCommit(spark, t, col("k") === 5L)
+    cat.alterTable(ident, TableChange.deleteColumn(Array("k"), null))
+    val after = VersionedTable.read(spark, t)
+    assert(!after.schema.fieldNames.contains("k"))
+    assert(after.select("amt").as[Long].collect().sorted.toSeq ==
+      (1L to 100L).filter(_ != 5L).map(_ * 10))
   }
 
   test("metadata tables: gt.<t>.history/files/tags/... serve via SQL") {

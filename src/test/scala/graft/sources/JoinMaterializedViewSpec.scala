@@ -69,7 +69,7 @@ class JoinMaterializedViewSpec extends SparkSpec {
     JoinMaterializedView.refresh(spark, fact, dim, mv)
     assert(mvRows(mv) == expect(fact, dim), "after dim merge+delete")
     // both sides move between refreshes
-    VersionedTable.deleteCommit(spark, fact, col("k") % 13 === 0, Seq("k"))
+    VersionedTable.deleteCommit(spark, fact, col("k") % 13 === 0)
     VersionedTable.mergeCommit(spark, dim,
       Seq((7L, "segBOTH", false)).toDF("custkey", "seg", "__del"),
       "custkey", deleteCol = Some("__del"))
@@ -139,7 +139,7 @@ class JoinMaterializedViewSpec extends SparkSpec {
             deleteCol = Some("__del"))
         case 2 => // fact DV delete
           VersionedTable.deleteCommit(spark, fact,
-            col("k") % (7 + rnd.nextInt(20)).toLong === 1L, Seq("k"))
+            col("k") % (7 + rnd.nextInt(20)).toLong === 1L)
         case 3 => // dim merge: move a segment
           VersionedTable.mergeCommit(spark, dim,
             Seq((rnd.nextInt(37).toLong, s"segR$step", false))

@@ -196,7 +196,7 @@ class ManifestStatsSpec extends SparkSpec {
     val t = freshTable()
     VersionedTable.commitPartitioned(spark, t, sample, "g",
       append = false, statCols = Seq("k"))
-    VersionedTable.deleteCommit(spark, t, col("k") % 10 === 0, Seq("k"))
+    VersionedTable.deleteCommit(spark, t, col("k") % 10 === 0)
     VersionedTable.dynamicOverwrite(spark, t,
       Seq((999L, "g1", 9.0)).toDF("k", "g", "amt"), "g")
     // full coverage after three different commit kinds → merge scan-free

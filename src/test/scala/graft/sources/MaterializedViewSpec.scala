@@ -61,7 +61,7 @@ class MaterializedViewSpec extends SparkSpec {
     MaterializedView.build(spark, src, mv, Seq("g"), Seq("x"))
     // DV-only change: kill the whole 'tiny' group plus a few others
     VersionedTable.deleteCommit(spark, src,
-      col("g") === "tiny" || col("k") % 10 === 0, Seq("k"))
+      col("g") === "tiny" || col("k") % 10 === 0)
     MaterializedView.refresh(spark, src, mv)
     val got = mvRows(mv)
     assert(!got.contains("tiny"), "zero-count group must be dropped")

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 
-/** Merge-on-read DELETE ([[VersionedTable.deleteCommitPositional]] /
+/** Merge-on-read DELETE ([[VersionedTable.deleteCommit]] /
   * [[VersionedTable.deleteCommitRouted]]): a point DELETE commits
   * O(matched rows) of positional tombstone sidecar — ZERO parquet
   * rewrites — while a bulk DELETE still rewrites copy-on-write; the
@@ -35,7 +35,7 @@ class MergeOnReadDeleteSpec extends SparkSpec {
   test("positional delete: rows gone, every data file carried verbatim") {
     val t = freshTable()
     seed(t)
-    val v = VersionedTable.deleteCommitPositional(spark, t,
+    val v = VersionedTable.deleteCommit(spark, t,
       col("k") % 100 === 0)
     assert(v == 2)
     assert(dataFiles(t, 1) == dataFiles(t, 2),
@@ -55,8 +55,8 @@ class MergeOnReadDeleteSpec extends SparkSpec {
   test("positional deletes compose (positions name original-file rows)") {
     val t = freshTable()
     seed(t)
-    VersionedTable.deleteCommitPositional(spark, t, col("k") <= 10)
-    VersionedTable.deleteCommitPositional(spark, t,
+    VersionedTable.deleteCommit(spark, t, col("k") <= 10)
+    VersionedTable.deleteCommit(spark, t,
       col("k") > 10 && col("k") <= 20)
     val got = VersionedTable.read(spark, t).as[(Long, Long)]
       .collect().map(_._1).toSet
@@ -69,7 +69,7 @@ class MergeOnReadDeleteSpec extends SparkSpec {
     seed(t)
     var pruned: (Int, Int) = (-1, -1)
     VersionedTable.deletePruneNotifier = (c, n) => pruned = (c, n)
-    try VersionedTable.deleteCommitPositional(spark, t,
+    try VersionedTable.deleteCommit(spark, t,
       lit(true), Seq(VersionedTable.ScanPred.NumBetween("k", 100L, 110L)))
     finally VersionedTable.deletePruneNotifier = (_, _) => ()
     assert(pruned._2 == 8 && pruned._1 >= 1 && pruned._1 <= 2,
@@ -77,15 +77,22 @@ class MergeOnReadDeleteSpec extends SparkSpec {
     assert(VersionedTable.read(spark, t).count() == 800 - 11)
   }
 
-  test("refuses to compose with key-column tombstones, names the remedy") {
+  test("API deletes and pruned or routed positional deletes compose") {
     val t = freshTable()
     seed(t)
-    VersionedTable.deleteCommit(spark, t, col("k") === 5L, Seq("k"))
-    val e = intercept[Exception] {
-      VersionedTable.deleteCommitPositional(spark, t, col("k") === 6L)
-    }
-    assert(e.getMessage.contains("keyed by") &&
-      e.getMessage.contains("purge_tombstones"), e.getMessage)
+    VersionedTable.deleteCommit(spark, t, col("k") === 5L)
+    VersionedTable.deleteCommit(spark, t, col("k") % 2 === 0,
+      Seq(VersionedTable.ScanPred.NumBetween("k", 1L, 100L)))
+    VersionedTable.setTableProperty(spark, t,
+      VersionedTable.DeleteModeProp, "merge-on-read")
+    VersionedTable.deleteCommitRouted(spark, t, col("k") === 7L, Nil)
+    val got = VersionedTable.read(spark, t).as[(Long, Long)]
+      .collect().toSeq.sorted
+    val want = (1L to 800L).map(i => (i, i * 10))
+      .filter { case (k, _) => k != 5L && k != 7L &&
+        !(k <= 100L && k % 2 == 0) }
+    assert(got == want)
+    assert(dataFiles(t, 1) == dataFiles(t, 4), "still zero rewrites")
   }
 
   test("routed auto: point delete goes merge-on-read, zero rewrites") {
@@ -242,8 +249,8 @@ class MergeOnReadDeleteSpec extends SparkSpec {
   test("purge_tombstones pays the merge-on-read debt back down") {
     val t = freshTable()
     seed(t)
-    VersionedTable.deleteCommitPositional(spark, t, col("k") % 100 === 0)
-    VersionedTable.deleteCommitPositional(spark, t, col("k") === 1L)
+    VersionedTable.deleteCommit(spark, t, col("k") % 100 === 0)
+    VersionedTable.deleteCommit(spark, t, col("k") === 1L)
     val v = VersionedTable.purgeTombstonesCommit(spark, t, 1000000L)
     assert(dvFiles(t, v).isEmpty, "debt consolidated to pure files")
     val got = VersionedTable.read(spark, t).as[(Long, Long)]
@@ -282,7 +289,7 @@ class MergeOnReadDeleteSpec extends SparkSpec {
   test("positional tombstones survive a column rename (physical keys)") {
     val t = freshTable()
     seed(t)
-    VersionedTable.deleteCommitPositional(spark, t, col("k") <= 100)
+    VersionedTable.deleteCommit(spark, t, col("k") <= 100)
     VersionedTable.renameColumnCommit(spark, t, "x", "amount")
     val got = VersionedTable.read(spark, t)
     assert(got.columns.toSeq == Seq("k", "amount"))

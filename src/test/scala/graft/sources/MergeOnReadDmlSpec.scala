@@ -105,15 +105,19 @@ class MergeOnReadDmlSpec extends SparkSpec {
     assert(VersionedTable.read(spark, t).count() == 795)
   }
 
-  test("keyed tombstones block a MOR statement with a pointed message") {
+  test("an API delete composes with a later MOR UPDATE") {
     val t = seed("k1")
-    VersionedTable.deleteCommit(spark, t, col("k") === 5L, Seq("k"))
+    VersionedTable.deleteCommit(spark, t, col("k") === 5L) // v2
     VersionedTable.setTableProperty(spark, t, "write.update.mode",
       "merge-on-read")
-    val e = intercept[Exception] {
-      spark.sql("UPDATE gmor.k1 SET x = 0 WHERE k = 6")
-    }
-    assert(e.getMessage.contains("purge_tombstones"), e.getMessage)
+    spark.sql("UPDATE gmor.k1 SET x = 0 WHERE k BETWEEN 4 AND 6") // v3
+    assert(dataFiles(t, 2).subsetOf(dataFiles(t, 3)),
+      "merge-on-read must carry every old file verbatim")
+    val got = VersionedTable.read(spark, t)
+      .select("k", "x").as[(Long, Long)].collect().toSeq.sorted
+    val want = (1L to 800L).filter(_ != 5L)
+      .map(i => (i, if (i == 4L || i == 6L) 0L else i * 10))
+    assert(got == want)
   }
 
   test("SELECT _file, _pos: the stable row identity is user-queryable") {

@@ -169,7 +169,7 @@ class MergeWhenSpec extends SparkSpec {
   test("merge through deletion vectors: tombstoned rows never resurface") {
     val t = fresh("vmwdv")
     seed(t)
-    VersionedTable.deleteCommit(spark, t, col("k") === 7L, Seq("k"))
+    VersionedTable.deleteCommit(spark, t, col("k") === 7L)
     // k=7 is tombstoned; a matched-update source for it must NOT match
     // (the row is logically gone) and a not-matched insert may re-add it
     VersionedTable.mergeCommitWhen(spark, t,

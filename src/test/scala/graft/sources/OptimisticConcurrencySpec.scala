@@ -104,7 +104,7 @@ class OptimisticConcurrencySpec extends SparkSpec {
       statCols = Seq("k"))
     val fired = new AtomicInteger(0)
     val v = VersionedTable.deleteCommitOptimistic(spark, t,
-      col("k") % 10 === 0, Seq("k"),
+      col("k") % 10 === 0,
       onAttempt = { _ =>
         if (fired.incrementAndGet() == 1)
           VersionedTable.commit(spark, t,
@@ -119,7 +119,7 @@ class OptimisticConcurrencySpec extends SparkSpec {
     val fired2 = new AtomicInteger(0)
     val e = intercept[java.util.ConcurrentModificationException] {
       VersionedTable.deleteCommitOptimistic(spark, t,
-        col("k") === 7L, Seq("k"),
+        col("k") === 7L,
         onAttempt = { _ =>
           if (fired2.incrementAndGet() == 1)
             VersionedTable.mergeCommit(spark, t,

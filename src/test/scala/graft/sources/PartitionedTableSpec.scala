@@ -207,7 +207,7 @@ class PartitionedTableSpec extends SparkSpec {
     VersionedTable.commitPartitioned(spark, t,
       sample.repartition(col("day")), "day", append = false)
     // delete one row in a partition that will CARRY, one that will die
-    VersionedTable.deleteCommit(spark, t, col("k").isin(1L, 3L), Seq("k"))
+    VersionedTable.deleteCommit(spark, t, col("k").isin(1L, 3L))
     VersionedTable.dynamicOverwrite(spark, t,
       Seq((8L, "2024-02", 80.0)).toDF("k", "day", "amt")
         .repartition(col("day")), "day")

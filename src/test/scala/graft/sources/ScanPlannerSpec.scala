@@ -110,7 +110,7 @@ class ScanPlannerSpec extends SparkSpec {
   test("tombstoned rows never resurface through the planner") {
     val t = fresh("vspd")
     seed(t)
-    VersionedTable.deleteCommit(spark, t, col("k") === 150L, Seq("k"))
+    VersionedTable.deleteCommit(spark, t, col("k") === 150L)
     val got = VersionedTable.readWhere(spark, t,
       Seq(NumBetween("k", 100L, 200L), PartIn("par", Seq("p0"))))
     assert(got.filter(col("k") === 150L).count() == 0)
@@ -155,7 +155,7 @@ class ScanPlannerSpec extends SparkSpec {
   test("countWhere never trusts tombstoned files' manifest counts") {
     val t = fresh("vcwdv")
     seed(t)
-    VersionedTable.deleteCommit(spark, t, col("k") === 50L, Seq("k"))
+    VersionedTable.deleteCommit(spark, t, col("k") === 50L)
     val preds = Seq(NumBetween("k", 1L, 1200L))
     assert(VersionedTable.countWhere(spark, t, preds) == 1199L)
     // and composed with a partition containment
@@ -210,7 +210,7 @@ class ScanPlannerSpec extends SparkSpec {
     assert(VersionedTable.minMaxWhere(spark, t, "k",
       Seq(NumBetween("k", 50000L, 60000L))) == ((None, None)))
     // exact under a tombstone that kills an extreme
-    VersionedTable.deleteCommit(spark, t, col("k") === 1200L, Seq("k"))
+    VersionedTable.deleteCommit(spark, t, col("k") === 1200L)
     val (_, mx2) = VersionedTable.minMaxWhere(spark, t, "k",
       Seq(NumBetween("k", 1L, 1200L)))
     assert(mx2.map(_.toLong) == Some(1199L))

@@ -151,7 +151,7 @@ class TableAdoptSpec extends SparkSpec {
       Seq((1L, 10L)).toDF("k", "x"), append = false)
     VersionedTable.commit(spark, stg,
       (1L to 10L).map(i => (i, i)).toDF("k", "x"), append = false)
-    VersionedTable.deleteCommit(spark, stg, col("k") === 3L, Seq("k"))
+    VersionedTable.deleteCommit(spark, stg, col("k") === 3L)
     intercept[IllegalArgumentException] {
       VersionedTable.adoptCommit(spark, t, stg)
     }

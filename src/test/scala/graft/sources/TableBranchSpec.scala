@@ -163,7 +163,7 @@ class TableBranchSpec extends SparkSpec {
     VersionedTable.deleteCommitWhere(spark, bp, col("k") <= 50)
     VersionedTable.commit(spark, bp,
       (201L to 220L).map(i => (i, i)).toDF("k", "x"), append = true)
-    VersionedTable.deleteCommit(spark, bp, col("k") === 60, Seq("k"))
+    VersionedTable.deleteCommit(spark, bp, col("k") === 60)
     // main diverges DISJOINTLY: appends file C
     VersionedTable.commit(spark, t,
       (101L to 150L).map(i => (i, i)).toDF("k", "x"), append = true)
@@ -216,7 +216,7 @@ class TableBranchSpec extends SparkSpec {
     VersionedTable.branchCommit(spark, t2, "morcow")
     VersionedTable.deleteCommitWhere(spark,
       VersionedTable.branchPath(t2, "morcow"), col("k") <= 50)
-    VersionedTable.deleteCommit(spark, t2, col("k") === 5, Seq("k"))
+    VersionedTable.deleteCommit(spark, t2, col("k") === 5)
     val e2 = intercept[IllegalArgumentException] {
       VersionedTable.cherryPickCommit(spark, t2, "morcow")
     }
@@ -229,7 +229,7 @@ class TableBranchSpec extends SparkSpec {
     val bp3 = VersionedTable.branchPath(t3, "selfdv")
     VersionedTable.commit(spark, bp3,
       (10L to 20L).map(i => (i, i)).toDF("k", "x"), append = true)
-    VersionedTable.deleteCommit(spark, bp3, col("k") === 15, Seq("k"))
+    VersionedTable.deleteCommit(spark, bp3, col("k") === 15)
     VersionedTable.commit(spark, t3,
       Seq((2L, 2L)).toDF("k", "x"), append = true) // diverge
     val e3 = intercept[IllegalArgumentException] {

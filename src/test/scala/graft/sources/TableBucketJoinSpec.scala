@@ -29,8 +29,7 @@ class TableBucketJoinSpec extends SparkSpec {
       facts.filter(col("orderkey") > 400), "custkey", 8, append = true)
     VersionedTable.commitBucketed(spark, tb, dims, "custkey", 8,
       append = false)
-    VersionedTable.deleteCommit(spark, ta, col("orderkey") % 11 === 0,
-      Seq("orderkey"))
+    VersionedTable.deleteCommit(spark, ta, col("orderkey") % 11 === 0)
     val got = VersionedTable.bucketJoin(spark, ta, tb, "custkey")
       .select("custkey", "orderkey", "tag", "segment")
       .as[(Long, Long, String, String)].collect().sorted.toSeq

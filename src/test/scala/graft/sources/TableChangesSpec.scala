@@ -89,7 +89,7 @@ class TableChangesSpec extends SparkSpec {
       base.repartitionByRange(5, col("k")), append = false)
     val m1 = VersionedTable.manifest(spark, t, 1)
     val v2 = VersionedTable.deleteCommit(spark, t,
-      col("k") % 50 === 0, Seq("k"))
+      col("k") % 50 === 0)
     val m2 = VersionedTable.manifest(spark, t, v2)
     // merge-on-read: every data file carried verbatim, one dv line added
     assert(VersionedTable.dataFilesOf(m2) == VersionedTable.dataFilesOf(m1))
@@ -100,7 +100,7 @@ class TableChangesSpec extends SparkSpec {
     // time travel: v1 still complete
     assert(VersionedTable.read(spark, t, Some(1)).count() == 500L)
     // stacked second delete composes
-    VersionedTable.deleteCommit(spark, t, col("k") <= 3, Seq("k"))
+    VersionedTable.deleteCommit(spark, t, col("k") <= 3)
     val after = VersionedTable.read(spark, t).select("k").as[Long]
       .collect().toSet
     assert(after.size == 487 && !after.contains(2L) && after.contains(4L))
@@ -111,7 +111,7 @@ class TableChangesSpec extends SparkSpec {
     VersionedTable.commit(spark, t,
       (1L to 1000L).map(i => (i, s"v$i")).toDF("k", "v")
         .repartitionByRange(4, col("k")), append = false)
-    VersionedTable.deleteCommit(spark, t, col("k") % 9 === 0, Seq("k"))
+    VersionedTable.deleteCommit(spark, t, col("k") % 9 === 0)
     val plan = VersionedTable.read(spark, t)
       .queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin") && plan.contains("LeftAnti"),
@@ -120,27 +120,26 @@ class TableChangesSpec extends SparkSpec {
       "the 100 TB data side must never shuffle for a delete read")
   }
 
-  test("a delete keyed differently from live tombstones is rejected") {
+  test("deletes by predicates on different columns compose") {
     val t = freshTable()
     VersionedTable.commit(spark, t,
       (1L to 50L).map(i => (i, s"v$i")).toDF("k", "v").repartition(4),
       append = false)
-    VersionedTable.deleteCommit(spark, t, col("k") === 1, Seq("k"))
-    val err = intercept[IllegalArgumentException] {
-      VersionedTable.deleteCommit(spark, t, col("v") === "v2", Seq("v"))
-    }
-    assert(err.getMessage.contains("same key"))
-    // after a purge (all files rewritten), a new key scheme is fine
-    VersionedTable.compactCommit(spark, t, targetRows = 1000L)
-    VersionedTable.deleteCommit(spark, t, col("v") === "v2", Seq("v"))
+    VersionedTable.deleteCommit(spark, t, col("k") === 1)
+    VersionedTable.deleteCommit(spark, t, col("v") === "v2")
     assert(VersionedTable.read(spark, t).count() == 48L)
+    // a purge (all files rewritten) keeps exactly the survivors
+    VersionedTable.compactCommit(spark, t, targetRows = 1000L)
+    VersionedTable.deleteCommit(spark, t, col("v") === "v3")
+    assert(VersionedTable.read(spark, t).select("k").as[Long].collect()
+      .sorted.toSeq == (4L to 50L))
   }
 
   test("deleteCommit matching nothing commits without a sidecar") {
     val t = freshTable()
     VersionedTable.commit(spark, t, Seq((1L, "a")).toDF("k", "v"),
       append = false)
-    val v2 = VersionedTable.deleteCommit(spark, t, col("k") > 100, Seq("k"))
+    val v2 = VersionedTable.deleteCommit(spark, t, col("k") > 100)
     assert(VersionedTable.dvFilesOf(
       VersionedTable.manifest(spark, t, v2)).isEmpty)
     assert(VersionedTable.read(spark, t).count() == 1L)
@@ -151,7 +150,7 @@ class TableChangesSpec extends SparkSpec {
     VersionedTable.commit(spark, t,
       (1L to 100L).map(i => (i, s"v$i")).toDF("k", "v")
         .repartitionByRange(4, col("k")), append = false)
-    VersionedTable.deleteCommit(spark, t, col("k") === 7, Seq("k"))
+    VersionedTable.deleteCommit(spark, t, col("k") === 7)
     val got = changes(t, 1, 2)
     assert(got == Map((7L, "v7", "delete") -> 1L))
     // pruning: only the one tombstoned file is touched, on both sides
@@ -168,7 +167,7 @@ class TableChangesSpec extends SparkSpec {
       base.repartitionByRange(4, col("k")), append = false)
     // tombstone one low-range row and one high-range row
     VersionedTable.deleteCommit(spark, t,
-      col("k") === 10 || col("k") === 390, Seq("k"))
+      col("k") === 10 || col("k") === 390)
     // merge touches only the low range: its file is rewritten (and its
     // tombstone materialized), the high file is carried with its dv
     val v3 = VersionedTable.mergeCommit(spark, t,

@@ -27,7 +27,7 @@ class TableCloneSpec extends SparkSpec {
     val srcM = VersionedTable.manifest(spark, src, 2)
     VersionedTable.mergeCommit(spark, cl,
       Seq((5L, 555L)).toDF("k", "x"), "k")
-    VersionedTable.deleteCommit(spark, cl, col("k") === 7L, Seq("k"))
+    VersionedTable.deleteCommit(spark, cl, col("k") === 7L)
     // source untouched through clone mutations
     assert(VersionedTable.manifest(spark, src, 2) == srcM)
     assert(VersionedTable.read(spark, src).count() == 31L)

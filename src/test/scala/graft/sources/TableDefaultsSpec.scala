@@ -90,7 +90,7 @@ class TableDefaultsSpec extends SparkSpec {
       (1L to 20L).map(i => (i, i)).toDF("k", "x"), append = false)
     VersionedTable.addColumnCommit(spark, t, "tag",
       org.apache.spark.sql.types.StringType, Some("'legacy'"))
-    VersionedTable.deleteCommit(spark, t, col("k") <= 3, Seq("k"))
+    VersionedTable.deleteCommit(spark, t, col("k") <= 3)
     val got = VersionedTable.read(spark, t)
       .select("k", "tag").as[(Long, String)].collect().toMap
     assert(got.size == 17 && got.values.forall(_ == "legacy"))

@@ -15,7 +15,8 @@ import graft.streaming.TableChangeStream
   * under a particular interleaving (merge after overwrite, delete over
   * a merged file, restore over either, ...) would slip it. Here a
   * seeded random walk drives commitPartitioned / mergeCommit /
-  * deleteCommit / dynamicOverwrite / restoreCommit / adoptCommit
+  * deleteCommit (unpruned and range-pruned) / dynamicOverwrite /
+  * restoreCommit / adoptCommit
   * against a driver-side model (a plain Map — the executable spec of
   * the table semantics), and after EVERY step asserts the three
   * invariants everything downstream rides on:
@@ -60,6 +61,7 @@ class TableFuzzSpec extends SparkSpec {
     // versions whose snapshot is mid-rename (logical column 'xtmp'):
     // restore skips them — the model has no name axis to roll back
     var midRename = Set.empty[Int]
+    var deletes = 0
     VersionedTable.commitPartitioned(spark, table, toDf(model), "g",
       append = false)
     MaterializedView.build(spark, table, mv, Seq("g"), Seq("x"))
@@ -83,12 +85,22 @@ class TableFuzzSpec extends SparkSpec {
           src.toDF("k", "g", "x", "__del"), "k", deleteCol = Some("__del"))
         model = (model -- del) ++ upd ++ ins
         s"merge(u${upd.size},d${del.size},i${ins.size})"
-      case 2 => // deletion-vector delete by key predicate
+      case 2 => // deletion-vector delete by key predicate; every other
+        // one (starting per seed parity) range-pruned — the doomed scan
+        // then opens only candidate files
         val m = 3 + rnd.nextInt(5); val r = rnd.nextInt(m)
-        VersionedTable.deleteCommit(spark, table,
-          col("k") % m === r, Seq("k"))
-        model = model.filter { case (k, _) => k % m != r }
-        s"delete(k%$m==$r)"
+        deletes += 1
+        if ((deletes + seed) % 2 == 0) {
+          VersionedTable.deleteCommit(spark, table, col("k") % m === r)
+          model = model.filter { case (k, _) => k % m != r }
+          s"delete(k%$m==$r)"
+        } else {
+          val hi = nextKey / 2
+          VersionedTable.deleteCommit(spark, table, col("k") % m === r,
+            Seq(VersionedTable.ScanPred.NumBetween("k", 1L, hi)))
+          model = model.filter { case (k, _) => k % m != r || k > hi }
+          s"delete(k%$m==$r, k<=$hi)"
+        }
       case 3 => // dynamic partition overwrite of one group
         val gv = groups(rnd.nextInt(groups.size))
         val repl = freshKeys(1 + rnd.nextInt(5))

@@ -109,7 +109,7 @@ class TableGeneratedSpec extends SparkSpec {
     // COW delete keyed on the computed column: pre-era rows 30..40
     // exist only as nc-era computations — they must still match
     VersionedTable.deleteCommit(spark, t,
-      col("dollars") >= 30L, Seq("k"))
+      col("dollars") >= 30L)
     val got = VersionedTable.read(spark, t)
       .select("k", "dollars").as[(Long, Long)].collect().toMap
     assert(got.keySet == (1L to 29L).toSet + 100L,
@@ -123,7 +123,7 @@ class TableGeneratedSpec extends SparkSpec {
       append = false)
     VersionedTable.addGeneratedColumnCommit(spark, t2,
       "dollars", LongType, "cents DIV 100")
-    VersionedTable.deleteCommitPositional(spark, t2,
+    VersionedTable.deleteCommit(spark, t2,
       col("dollars") <= 5L)
     assert(VersionedTable.read(spark, t2).count() == 15L)
     assert(VersionedTable.read(spark, t2)

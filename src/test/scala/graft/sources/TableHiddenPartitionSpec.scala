@@ -131,7 +131,7 @@ class TableHiddenPartitionSpec extends SparkSpec {
     val rows = (0L until 40L).map(i => (i * 10L, i)).toDF("ts", "id")
     VersionedTable.commitTransformed(spark, t, rows, "ts", 100L,
       append = false)
-    VersionedTable.deleteCommit(spark, t, col("id") === 12L, Seq("id"))
+    VersionedTable.deleteCommit(spark, t, col("id") === 12L)
     val got = VersionedTable.readTransformRange(spark, t, 100L, 199L)
       .select("id").as[Long].collect().toSet
     assert(got == Set(10L, 11L, 13L, 14L, 15L, 16L, 17L, 18L, 19L))

@@ -19,7 +19,7 @@ class TableIntrospectionSpec extends SparkSpec {
     VersionedTable.commit(spark, t,
       (1L to 100L).map(i => (i, i)).toDF("k", "x")
         .repartitionByRange(4, col("k")), append = false)
-    VersionedTable.deleteCommit(spark, t, col("k") === 7, Seq("k"))
+    VersionedTable.deleteCommit(spark, t, col("k") === 7)
     VersionedTable.commit(spark, t,
       Seq((200L, 1L)).toDF("k", "x"), append = true,
       meta = Map("job" -> "nightly"))

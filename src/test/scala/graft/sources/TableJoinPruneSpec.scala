@@ -76,7 +76,7 @@ class TableJoinPruneSpec extends SparkSpec {
 
   test("deleted rows never resurface through the pruned path") {
     val t = clustered()
-    VersionedTable.deleteCommit(spark, t, col("k") === 17L, Seq("k"))
+    VersionedTable.deleteCommit(spark, t, col("k") === 17L)
     val dim = Seq(17L, 18L).toDF("k")
     val got = sortedRows(VersionedTable.readJoinPruned(spark, t, "k", dim)
       .join(dim, Seq("k")))
@@ -189,7 +189,7 @@ class TableJoinPruneSpec extends SparkSpec {
     val t = clustered()
     VersionedTable.commit(spark, t,
       Seq((900L, "late", 0L)).toDF("k", "v", "g"), append = true)
-    VersionedTable.deleteCommit(spark, t, col("k") % 100 === 50, Seq("k"))
+    VersionedTable.deleteCommit(spark, t, col("k") % 100 === 50)
     val dim = (1L to 900L by 90L).toDF("k")
     val got = sortedRows(VersionedTable.readJoinPruned(spark, t, "k", dim)
       .join(dim, Seq("k")))

@@ -23,8 +23,7 @@ class TableMaintainPolicySpec extends SparkSpec {
     VersionedTable.commit(spark, t,
       (1000L to 1500L).map(k => (k, k * 2)).toDF("k", "v").coalesce(1),
       append = true, statCols = Seq("k"))
-    VersionedTable.deleteCommit(spark, t, col("k") === 5L || col("k") === 7L,
-      Seq("k"))
+    VersionedTable.deleteCommit(spark, t, col("k") === 5L || col("k") === 7L)
     val before = VersionedTable.manifest(spark, t, 3)
     val cleanFile = VersionedTable.dataFilesOf(
       VersionedTable.manifest(spark, t, 2))
@@ -72,7 +71,7 @@ class TableMaintainPolicySpec extends SparkSpec {
     }
     // DV debt on the big clustered files
     (0 until 4).foreach { i =>
-      VersionedTable.deleteCommit(spark, t, col("k") === (100L + i), Seq("k"))
+      VersionedTable.deleteCommit(spark, t, col("k") === (100L + i))
     }
     // maxUnclustered low enough that the compact's own outputs (all
     // fresh vs the cluster baseline) still trip the recluster check —

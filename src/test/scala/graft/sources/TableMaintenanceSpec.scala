@@ -25,7 +25,7 @@ class TableMaintenanceSpec extends SparkSpec {
         .repartition(20), append = true)
     // tombstones on BOTH populations
     VersionedTable.deleteCommit(spark, t,
-      col("k") === 5L || col("k") === 1005L, Seq("k"))
+      col("k") === 5L || col("k") === 1005L)
     val mBefore = VersionedTable.manifest(spark, t, 3)
     val bigFiles = VersionedTable.dataFilesOf(
       VersionedTable.manifest(spark, t, 1))
@@ -94,7 +94,7 @@ class TableMaintenanceSpec extends SparkSpec {
     VersionedTable.commit(spark, t,
       (1L to 1000L).map(i => (i * 467 % 1000, i)).toDF("k", "x")
         .repartition(8), append = false)
-    VersionedTable.deleteCommit(spark, t, col("x") === 77L, Seq("x"))
+    VersionedTable.deleteCommit(spark, t, col("x") === 77L)
     val v3 = VersionedTable.clusterCommit(spark, t, Seq("k"), 8)
     val m3 = VersionedTable.manifest(spark, t, v3)
     assert(VersionedTable.dvFilesOf(m3).isEmpty,
@@ -117,7 +117,7 @@ class TableMaintenanceSpec extends SparkSpec {
     VersionedTable.commit(spark, t,
       (1L to 1000L).map(i => (i, i * 3)).toDF("k", "x")
         .repartitionByRange(10, col("k")), append = false)
-    VersionedTable.deleteCommit(spark, t, col("k") % 100 === 0, Seq("k"))
+    VersionedTable.deleteCommit(spark, t, col("k") % 100 === 0)
     val got = VersionedTable.readPruned(spark, t, Seq(("k", 150L, 250L)))
       .as[(Long, Long)].collect().toSet
     val want = VersionedTable.read(spark, t)

@@ -55,7 +55,7 @@ class TableMetadataOpsSpec extends SparkSpec {
       append = false, statCols = Seq("k"))
     // kill the global max and min — their files' stats now overstate
     VersionedTable.deleteCommit(spark, t,
-      col("k") === 100L || col("k") === 1L, Seq("k"))
+      col("k") === 100L || col("k") === 1L)
     val (got, scans) = countScans {
       oneRow(VersionedTable.statsAggregate(spark, t, Seq("k")))
     }
@@ -70,7 +70,7 @@ class TableMetadataOpsSpec extends SparkSpec {
     VersionedTable.commit(spark, t,
       (1L to 120L).toDF("k").repartitionByRange(4, col("k")),
       append = false, statCols = Seq("k"))
-    VersionedTable.deleteCommit(spark, t, col("k") % 8 === 0, Seq("k"))
+    VersionedTable.deleteCommit(spark, t, col("k") % 8 === 0)
     val (got, scans) = countScans {
       oneRow(VersionedTable.statsAggregate(spark, t, Seq.empty))
     }
@@ -104,10 +104,10 @@ class TableMetadataOpsSpec extends SparkSpec {
     val old = VersionedTable.deletePruneNotifier
     VersionedTable.deletePruneNotifier = (c, n) => seen = Some((c, n))
     try VersionedTable.deleteCommitPruned(spark, pruned,
-      Seq(("k", 101L, 150L)), lit(true), Seq("k"))
+      Seq(("k", 101L, 150L)), lit(true))
     finally VersionedTable.deletePruneNotifier = old
     VersionedTable.deleteCommit(spark, plain,
-      col("k") >= 101L && col("k") <= 150L, Seq("k"))
+      col("k") >= 101L && col("k") <= 150L)
     val a = VersionedTable.read(spark, pruned)
       .as[(Long, String)].collect().sorted.toSeq
     val b = VersionedTable.read(spark, plain)
@@ -154,7 +154,7 @@ class TableMetadataOpsSpec extends SparkSpec {
       assert(scans == 0, s"covered snapshot must scan nothing, read $scans")
       // tombstone two days: only their files are read
       VersionedTable.deleteCommit(spark, t,
-        col("ts") < 200L && col("id") % 2 === 0, Seq("id"))
+        col("ts") < 200L && col("id") % 2 === 0)
       scans = 0
       val got2 = VersionedTable.partitionCounts(spark, t, tcol)
         .as[(Option[String], Long)].collect().toMap
@@ -232,7 +232,7 @@ class TableMetadataOpsSpec extends SparkSpec {
       "p", append = false, statCols = Seq("k"))
     // kill partition x's max and min: its file is tombstoned → scanned
     VersionedTable.deleteCommit(spark, t,
-      col("k") === 100L || col("k") === 1L, Seq("k"))
+      col("k") === 100L || col("k") === 1L)
     val got = VersionedTable.partitionStats(spark, t, "p", "k")
       .as[(String, Long, Long, Long)].collect().toSet
     assert(got == Set(("x", 98L, 2L, 99L), ("y", 100L, 101L, 200L)))

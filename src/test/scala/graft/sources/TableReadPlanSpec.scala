@@ -29,7 +29,7 @@ class TableReadPlanSpec extends SparkSpec {
       (1L to 100L).map(i => (i, s"payload$i" * 10, i * 2, s"v$i"))
         .toDF("k", "wide", "x", "v"),
       append = false)
-    VersionedTable.deleteCommit(spark, t, col("k") === 7L, Seq("k"))
+    VersionedTable.deleteCommit(spark, t, col("k") === 7L)
     val df = VersionedTable.read(spark, t).select("k", "x")
     // base-table scan: only k and x (the DV key k is already needed);
     // the `wide` and `v` columns never reach any scan

@@ -20,7 +20,7 @@ class TableRestoreSpec extends SparkSpec {
       (1L to 40L).map(i => (i, s"v$i")).toDF("k", "v")
         .repartitionByRange(4, col("k")), append = false,
       statCols = Seq("k"))
-    VersionedTable.deleteCommit(spark, t, col("k") % 5 === 0, Seq("k"))
+    VersionedTable.deleteCommit(spark, t, col("k") % 5 === 0)
     VersionedTable.mergeCommit(spark, t,
       Seq((7L, "UPD")).toDF("k", "v"), "k")
     val v4 = VersionedTable.restoreCommit(spark, t, 1)
@@ -44,7 +44,7 @@ class TableRestoreSpec extends SparkSpec {
     val t = fresh()
     VersionedTable.commit(spark, t,
       (1L to 30L).map(i => (i, s"v$i")).toDF("k", "v"), append = false)
-    VersionedTable.deleteCommit(spark, t, col("k") === 3L, Seq("k"))
+    VersionedTable.deleteCommit(spark, t, col("k") === 3L)
     VersionedTable.restoreCommit(spark, t, 1)
     val feed = VersionedTable.readChanges(spark, t, 2, 3)
       .select(col("k"), col("v"), col("change"), col("n"))

@@ -103,7 +103,7 @@ class TableUpdateSpec extends SparkSpec {
     VersionedTable.commit(spark, t,
       (1L to 100L).map(i => (i, i)).toDF("k", "x")
         .repartitionByRange(4, col("k")), append = false)
-    VersionedTable.deleteCommit(spark, t, col("k") === 7L, Seq("k"))
+    VersionedTable.deleteCommit(spark, t, col("k") === 7L)
     // the rewrite materializes its file post-tombstone: k=7 must not
     // resurrect, k<=25 others update
     VersionedTable.updateCommit(spark, t, col("k") <= 25L,

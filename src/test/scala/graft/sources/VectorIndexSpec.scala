@@ -92,7 +92,7 @@ class VectorIndexSpec extends SparkSpec {
       // delete the duplicate (positional tombstone, no rewrite): the
       // assignment rows of its file are no longer index-servable and
       // the row must vanish — never a phantom candidate
-      VersionedTable.deleteCommitPositional(spark, t,
+      VersionedTable.deleteCommit(spark, t,
         col("vec_id") === 500L)
       val got2 = VersionedTable.vectorIndexTopK(spark, t, "embedding",
         queries, "vec_id", k = 5, nprobe = 2).get
@@ -151,7 +151,7 @@ class VectorIndexSpec extends SparkSpec {
       assert(scanned == ((0, 5)),
         s"after refresh every file serves index-only: $scanned")
       // new tombstones on the refreshed-in file: exact staleness
-      VersionedTable.deleteCommitPositional(spark, t,
+      VersionedTable.deleteCommit(spark, t,
         col("vec_id") === 500L)
       val got2 = VersionedTable.vectorIndexTopK(spark, t, "embedding",
         queries, "vec_id", k = 3, nprobe = 2).get

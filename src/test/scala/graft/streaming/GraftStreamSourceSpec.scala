@@ -58,7 +58,7 @@ class GraftStreamSourceSpec extends SparkSpec {
       Seq((100L, 1L)).toDF("k", "amt"), append = true)
     VersionedTable.mergeCommit(spark, t,
       Seq((5L, 999L)).toDF("k", "amt"), "k")
-    VersionedTable.deleteCommit(spark, t, col("k") === 7L, Seq("k"))
+    VersionedTable.deleteCommit(spark, t, col("k") === 7L)
     val (b2, _) = drain(t, ckpt)
     assert(b2.nonEmpty && b2.forall(_.getAs[Long]("_commit_version") > 1L),
       "a caught-up checkpoint must not re-deliver the bootstrap")

@@ -188,7 +188,7 @@ class IncrementalIngestSpec extends SparkSpec {
       "caught-up drain must not commit")
     // retirement purge: tombstones leave for good
     graft.sources.VersionedTable.deleteCommit(spark, table,
-      col("__deleted"), Seq("k"))
+      col("__deleted"))
     assert(graft.sources.VersionedTable.read(spark, table)
       .filter(col("__deleted")).count() == 0L)
   }

@@ -110,7 +110,7 @@ class TableChangeStreamSpec extends SparkSpec {
     VersionedTable.mergeCommit(spark, t,
       Seq((10L, "UPD", false), (11L, "", true), (99L, "NEW", false))
         .toDF("k", "v", "__del"), "k", deleteCol = Some("__del"))
-    VersionedTable.deleteCommit(spark, t, col("k") % 7 === 0, Seq("k"))
+    VersionedTable.deleteCommit(spark, t, col("k") % 7 === 0)
     // logical overwrite: the feed sees every old row deleted + new inserted
     VersionedTable.commit(spark, t,
       VersionedTable.read(spark, t).filter(col("k") <= 20L), append = false)
@@ -156,7 +156,7 @@ class TableChangeStreamSpec extends SparkSpec {
     // surface it as NULL, and the feed/fold must track that exactly
     VersionedTable.commit(spark, t,
       Seq((3L, "c", 30L)).toDF("k", "v", "x"), append = true)
-    VersionedTable.deleteCommit(spark, t, col("k") === 1L, Seq("k"))
+    VersionedTable.deleteCommit(spark, t, col("k") === 1L)
     TableChangeStream.drainToVersionedTable(spark, t, dest, ckpt)
     val folded = TableChangeStream
       .foldFeed(VersionedTable.read(spark, dest))
