@@ -1357,7 +1357,11 @@ private[sources] class GraftScan(path: String, version: Int,
     new BaseRelation with TableScan {
       override def sqlContext: SQLContext = context
       override def schema: StructType = outer.readSchema()
-      override def buildScan(): RDD[Row] = outer.dataFrame().rdd
+      // the planned rows are already InternalRows of `schema`: hand
+      // them over as-is instead of a round trip through external Row
+      override def needConversion: Boolean = false
+      override def buildScan(): RDD[Row] =
+        outer.dataFrame().queryExecution.toRdd.asInstanceOf[RDD[Row]]
     }.asInstanceOf[T]
   }
 

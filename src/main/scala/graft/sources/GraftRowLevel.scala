@@ -262,9 +262,7 @@ private[sources] class GraftRowLevelScan(op: GraftRowLevelLike,
             lit(null).cast(org.apache.spark.sql.types.LongType))
         else empty
       } else {
-        val sub = candidates ++ VersionedTable.dvLinesOf(lines) ++
-          VersionedTable.cmLinesOf(lines) ++
-          VersionedTable.scLinesOf(lines)
+        val sub = candidates ++ VersionedTable.readContextOf(lines)
         if (op.withPos)
           VersionedTable.readSnapshotTaggedWithPos(spark, sub)
             .withColumnRenamed(VersionedTable.FileColName,

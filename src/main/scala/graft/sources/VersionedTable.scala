@@ -118,8 +118,7 @@ object VersionedTable {
         lit(null).cast(org.apache.spark.sql.types.LongType))
       else empty
     } else {
-      val sub = cand ++ dvLinesOf(lines) ++ cmLinesOf(lines) ++
-        scLinesOf(lines)
+      val sub = cand ++ readContextOf(lines)
       if (withPos)
         readSnapshotTaggedWithPos(spark, sub)
           .withColumnRenamed(FileCol, MetaFileCol)
@@ -309,6 +308,17 @@ object VersionedTable {
 
   private[sources] def cmLinesOf(lines: Seq[String]): Seq[String] =
     lines.filter(_.startsWith(CmPrefix))
+
+  /** The lines a SUBSET read of a snapshot carries beside its chosen
+    * data lines, so it reads those files exactly as the full read
+    * does: dv tombstones apply, cm names map, sc declared columns
+    * surface, nc era tags compute defaulted and GENERATED columns for
+    * pre-era rows, and fz sizes plan the scan with no getFileStatus.
+    * Lines naming files outside the subset are inert. */
+  private[sources] def readContextOf(lines: Seq[String]): Seq[String] =
+    lines.filter(l => l.startsWith(DvPrefix) || l.startsWith(CmPrefix) ||
+      l.startsWith(ScPrefix) || l.startsWith(NcPrefix) ||
+      l.startsWith(FzPrefix))
 
   /** The deletion-vector sidecar lines — carried into subset reads so
     * tombstones apply ([[readSnapshot]]). */
@@ -1538,17 +1548,22 @@ object VersionedTable {
     * declared column surface it as typed nulls, files carrying
     * retired physical columns have them ignored. Legacy manifests
     * (no sc line — pre-sc history, adopted trees) keep the
-    * merged-footer inference. */
+    * merged-footer inference. `tagged` appends the file identity
+    * [[FileCol]]: a per-file constant of the index's tag mode, or
+    * [[normFileExpr]] per row on the legacy inference read. */
   private def baseSnapshotRead(spark: SparkSession, lines: Seq[String],
-                               data: Seq[String]): DataFrame =
+                               data: Seq[String],
+                               tagged: Boolean): DataFrame =
     physSchemaOf(lines) match {
       case Some(phys) =>
         // manifest-planned scan ([[GraftFileIndex]]): file sizes from
         // fz lines (subset reads that drop them stat once, in parallel,
         // on the driver pool) — no InMemoryFileIndex listing job/RPCs
-        GraftFileIndex.parquetFrame(spark, data, phys, fzLookup(lines))
+        GraftFileIndex.parquetFrame(spark, data, phys, fzLookup(lines),
+          tagged)
       case None =>
-        spark.read.option("mergeSchema", "true").parquet(data: _*)
+        val df = spark.read.option("mergeSchema", "true").parquet(data: _*)
+        if (tagged) df.withColumn(FileCol, normFileExpr) else df
     }
 
   /** The PHYSICAL read schema of a manifest: the sc line's fields
@@ -1587,12 +1602,18 @@ object VersionedTable {
     val nc =
       if (defaults.isEmpty) Map.empty[String, Set[String]]
       else ncTagsOf(lines)
+    // tombstones key on the row identity: tag the scan only when a
+    // sidecar is live
+    def scan(files: Seq[String]): DataFrame = {
+      val df = baseSnapshotRead(spark, lines, files, tagged = dvs.nonEmpty)
+      if (dvs.isEmpty) df else withRowPos(df)
+    }
     if (nc.isEmpty) {
       // no default-era files in this snapshot: the original single
       // explicit-schema scan
-      val base = baseSnapshotRead(spark, lines, data)
+      val base = scan(data)
       widenToDeclared(applyMapping(if (dvs.isEmpty) base
-      else applyTombstones(spark, withRowId(base), dvs,
+      else applyTombstones(spark, base, dvs,
         fzLookup(lines)).drop(FileCol, PosCol),
         lines), lines)
     } else {
@@ -1603,8 +1624,6 @@ object VersionedTable {
       // their physical values (NULL included). Scan-level pseudo
       // columns (file identity, row position) materialize INSIDE each
       // branch — they cannot resolve above a union.
-      def scanCols(df: DataFrame): DataFrame =
-        if (dvs.isEmpty) df else withRowId(df)
       val renames = renameMapOf(lines) // logical -> physical
       val physDefault = defaults.map { case (lg, d) =>
         renames.getOrElse(lg, lg) -> d }
@@ -1612,7 +1631,7 @@ object VersionedTable {
         .groupBy(f => nc.getOrElse(norm(f), Set.empty)
           .intersect(physDefault.keySet)).toSeq
         .map { case (missing, files) =>
-          val df = scanCols(baseSnapshotRead(spark, lines, files))
+          val df = scan(files)
           missing.foldLeft(df) { (d, physCol) =>
             val (dt, sqlText) = physDefault(physCol)
             // a GENERATED expression references OTHER columns by
@@ -1648,16 +1667,16 @@ object VersionedTable {
     org.apache.spark.sql.GraftSqlShims.column(mapped)
   }
 
-  /** `df` plus the row identity tombstones key on: [[FileCol]] and
-    * [[PosCol]], the row's ordinal from the parquet reader's
-    * `_metadata.row_index`. Scan-level pseudo columns — they cannot
-    * resolve above a union. */
-  private def withRowId(df: DataFrame): DataFrame =
-    df.withColumn(FileCol, normFileExpr).withColumn(PosCol,
+  /** A tagged scan (carrying [[FileCol]]) plus the rest of the row
+    * identity tombstones key on: [[PosCol]], the row's ordinal from
+    * the parquet reader's `_metadata.row_index`. A scan-level pseudo
+    * column — it cannot resolve above a union. */
+  private def withRowPos(df: DataFrame): DataFrame =
+    df.withColumn(PosCol,
       org.apache.spark.sql.functions.col("_metadata.row_index"))
 
   /** Apply a snapshot's deletion-vector sidecars to `base` (which must
-    * already carry [[withRowId]]'s columns): one broadcast (file,
+    * already carry [[FileCol]] and [[PosCol]]): one broadcast (file,
     * position) anti-join — O(deleted rows) broadcast, zero shuffle of
     * the data side. Data files are immutable, so positions never
     * shift, and tombstones name PHYSICAL file rows, so they survive
@@ -1687,13 +1706,15 @@ object VersionedTable {
 
   /** `input_file_name()` normalized to a bare path (scheme/authority
     * stripped) so it compares equal to manifest entries regardless of
-    * `file:/` vs `file:///` spelling. */
+    * `file:/` vs `file:///` spelling — evaluated per row, so only the
+    * legacy inference read (no sc line) uses it; every other tagged
+    * read gets the same string per file ([[GraftFileIndex.fileTag]]). */
   private def normFileExpr: org.apache.spark.sql.Column =
     org.apache.spark.sql.functions.expr(
       // `scheme://authority/path` first, then authority-free `scheme:/path`
-      "regexp_replace(regexp_replace(input_file_name()," +
-        " '^[a-zA-Z][a-zA-Z0-9+.-]*://[^/]*', '')," +
-        " '^[a-zA-Z][a-zA-Z0-9+.-]*:', '')")
+      s"regexp_replace(regexp_replace(input_file_name()," +
+        s" '${GraftFileIndex.SchemeAuthorityRe}', '')," +
+        s" '${GraftFileIndex.SchemeRe}', '')")
 
   /** DELETE via deletion vectors — merge-on-read, the Delta
     * deletion-vector / Iceberg positional-delete pattern: instead of
@@ -1770,9 +1791,7 @@ object VersionedTable {
     // on the files read)
     val scanLines =
       if (preds.isEmpty) lines
-      else scanCandidates(lines, preds) ++ lines.filter(l =>
-        l.startsWith(DvPrefix) || l.startsWith(CmPrefix) ||
-          l.startsWith(FzPrefix) || l.startsWith(ScPrefix))
+      else scanCandidates(lines, preds) ++ readContextOf(lines)
     val scanned = dataFilesOf(scanLines).size
     deletePruneNotifier(scanned, data.size)
     val doomed =
@@ -2083,9 +2102,7 @@ object VersionedTable {
               Seq.empty, head)
             catch { case c: VersionConflict => sys.error(c.getMessage) }
           } else {
-            val probeLines =
-              boundary ++ dvLinesOf(lines) ++ cmLinesOf(lines) ++
-                scLinesOf(lines)
+            val probeLines = boundary ++ readContextOf(lines)
             val effPred =
               if (preds.isEmpty) predicate
               else predicate && predExpr(preds)
@@ -2109,8 +2126,7 @@ object VersionedTable {
               val lineOf = dataLineByPath(lines)
               val matchedLines =
                 (containedNorm ++ perFile.keys).toSeq.map(lineOf) ++
-                  dvLinesOf(lines) ++ cmLinesOf(lines) ++
-                  scLinesOf(lines)
+                  readContextOf(lines)
               val doomed = readSnapshotTaggedWithPos(spark, matchedLines)
                 .filter(effPred).select(FileCol, PosCol)
               try publishTombstones(spark, table, lines, Some(doomed),
@@ -2177,9 +2193,7 @@ object VersionedTable {
     // and reports the file identities it matched in (O(files) set)
     val scanLines =
       if (prunePreds.isEmpty) lines
-      else scanCandidates(lines, prunePreds) ++ dvLines ++
-        cmLinesOf(lines) ++ scLinesOf(lines) ++
-        lines.filter(_.startsWith(FzPrefix))
+      else scanCandidates(lines, prunePreds) ++ readContextOf(lines)
     rewriteProbeNotifier(dataFilesOf(scanLines).size, data.size)
     val rangePred =
       if (prunePreds.isEmpty) predicate
@@ -2506,11 +2520,12 @@ object VersionedTable {
       else ncTagsOf(lines)
     // the row ordinal can only materialize at SCAN level — inside each
     // era branch, never above the union
-    def scanCols(df: DataFrame): DataFrame =
-      if (withPos || dvs.nonEmpty) withRowId(df)
-      else df.withColumn(FileCol, normFileExpr)
+    def scan(files: Seq[String]): DataFrame = {
+      val df = baseSnapshotRead(spark, lines, files, tagged = true)
+      if (withPos || dvs.nonEmpty) withRowPos(df) else df
+    }
     val base =
-      if (nc.isEmpty) scanCols(baseSnapshotRead(spark, lines, data))
+      if (nc.isEmpty) scan(data)
       else {
         val renames = renameMapOf(lines)
         val physDefault = defaults.map { case (lg, d) =>
@@ -2518,7 +2533,7 @@ object VersionedTable {
         data.groupBy(f => nc.getOrElse(norm(f), Set.empty)
             .intersect(physDefault.keySet)).toSeq
           .map { case (missing, files) =>
-            val df = scanCols(baseSnapshotRead(spark, lines, files))
+            val df = scan(files)
             missing.foldLeft(df) { (d, physCol) =>
               val (dt, sqlText) = physDefault(physCol)
               d.withColumn(physCol,
@@ -5900,8 +5915,7 @@ object VersionedTable {
         else {
           if (scan.exists(f => !tombstoned(norm(f))))
             statsScanNotifier("statsAggregate", scan.size)
-          readSnapshot(spark, scan ++ dvLines ++ cmLinesOf(lines) ++
-          scLinesOf(lines) ++ lines.filter(_.startsWith(NcPrefix))).count()
+          readSnapshot(spark, scan ++ readContextOf(lines)).count()
         }
       return Seq(servedRows + scanRows).toDF("n_rows")
     }
@@ -5928,8 +5942,7 @@ object VersionedTable {
       else {
         if (scan.exists(f => !tombstoned(norm(f))))
           statsScanNotifier("statsAggregate", scan.size)
-        Some(aggd(readSnapshot(spark, scan ++ dvLines ++ cmLinesOf(lines) ++
-          scLinesOf(lines) ++ lines.filter(_.startsWith(NcPrefix))),
+        Some(aggd(readSnapshot(spark, scan ++ readContextOf(lines)),
           count(lit(1)), c => col(c), c => col(c)))
       }
     (servedAgg, scanAgg) match {
@@ -5985,8 +5998,7 @@ object VersionedTable {
       .toDF(partCol, "n_rows")
     if (scan.isEmpty) return servedDf
     statsScanNotifier("partitionCounts", scan.size)
-    val scanDf = readSnapshot(spark, scan ++ dvLines ++ cmLinesOf(lines) ++
-          scLinesOf(lines) ++ lines.filter(_.startsWith(NcPrefix)))
+    val scanDf = readSnapshot(spark, scan ++ readContextOf(lines))
       .groupBy(col(partCol).cast("string").as(partCol))
       .agg(count(lit(1)).cast("long").as("n_rows"))
     servedDf.unionByName(scanDf)
@@ -6045,8 +6057,7 @@ object VersionedTable {
       if (scan.isEmpty) servedDf
       else {
         statsScanNotifier("partitionStats", scan.size)
-        servedDf.unionByName(readSnapshot(spark, scan ++ dvLines ++ cmLinesOf(lines) ++
-          scLinesOf(lines) ++ lines.filter(_.startsWith(NcPrefix)))
+        servedDf.unionByName(readSnapshot(spark, scan ++ readContextOf(lines))
           .groupBy(col(partCol).cast("string").as(partCol))
           .agg(count(lit(1)).cast("long").as("n_rows"),
             min(col(statCol)).as("mn"), max(col(statCol)).as("mx")))

@@ -68,6 +68,61 @@ class DvSidecarReadSpec extends SparkSpec {
     assert(VersionedTable.read(spark, t, Some(1)).count() == 400L)
   }
 
+  test("tagged reads carry each file's identity, spelled as the " +
+    "per-row input_file_name expression spelled it") {
+    // a directory name Spark URL-encodes: space, %, # and, where the
+    // JVM's file-name encoding can spell one, a non-ASCII character
+    val nonAscii =
+      if (System.getProperty("sun.jnu.encoding") == "UTF-8") "\u00e9" else ""
+    val t = Files.createTempDirectory(s"vdvr tag %25 #x$nonAscii")
+      .toString + "/t"
+    seed(t) // v1: 4 files
+    val lines = VersionedTable.manifest(spark, t, 1)
+    val files = VersionedTable.dataFilesOf(lines)
+    assert(files.size == 4)
+    // the per-row spelling older builds stored in `__gf`
+    val legacy = expr("regexp_replace(regexp_replace(input_file_name()," +
+      " '^[a-zA-Z][a-zA-Z0-9+.-]*://[^/]*', '')," +
+      " '^[a-zA-Z][a-zA-Z0-9+.-]*:', '')")
+    // sized (fz) files keep the manifest path; unsized ones are stat-ed
+    // and carry the file system's qualified path — both spell alike
+    for (ls <- Seq(lines, lines.filterNot(_.startsWith("fz\t")))) {
+      val pairs = VersionedTable.readSnapshotTagged(spark, ls)
+        .select(col("__gf"), legacy).as[(String, String)].collect()
+      assert(pairs.length == 400 && pairs.forall(p => p._1 == p._2),
+        pairs.find(p => p._1 != p._2).toString)
+      assert(pairs.map(_._1).distinct.length == 4)
+    }
+    val tagged = VersionedTable.readSnapshotTagged(spark, lines)
+    val tagOf = tagged.select("__gf", "k").as[(String, Long)].collect()
+      .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
+    // filtering on the tag lists exactly the files it admits
+    tagOf.foreach { case (tag, ks) =>
+      assert(tagged.filter(col("__gf") === tag).select("k").as[Long]
+        .collect().toSet == ks)
+    }
+    val two = tagOf.keys.toSeq.take(2)
+    assert(tagged.filter(col("__gf").isin(two: _*)).count() ==
+      two.map(tagOf(_).size).sum)
+    assert(tagged.filter(col("__gf") === "/no/such/file").count() == 0L)
+    // a sidecar written with the per-row spelling still hides its rows
+    val f0 = files.head
+    val doomed = spark.read.parquet(f0)
+      .select(legacy.as("__gf"), col("_metadata.row_index").as("__gpos"),
+        col("k"))
+      .orderBy("__gpos").limit(3).collect()
+    val dir = new Path(t, "data/2-dv-old").toString
+    doomed.map(r => (r.getString(0), r.getLong(1))).toSeq
+      .toDF("__gf", "__gpos").coalesce(1).write.parquet(dir)
+    val side = new Path(dir).getFileSystem(
+      spark.sparkContext.hadoopConfiguration).listStatus(new Path(dir))
+      .map(_.getPath.toString).filter(_.endsWith(".parquet")).toSeq
+    VersionedTable.writeManifest(spark, t, 2, lines ++ side.map("dv\t" + _))
+    val gone = doomed.map(_.getLong(2)).toSet
+    assert(VersionedTable.read(spark, t).select("k").as[Long].collect()
+      .toSet == (1L to 400L).toSet -- gone)
+  }
+
   test("changedFiles unions sidecar generations across a purge") {
     val t = freshTable()
     seed(t) // v1

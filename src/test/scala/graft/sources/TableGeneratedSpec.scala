@@ -130,6 +130,52 @@ class TableGeneratedSpec extends SparkSpec {
       .agg(min(col("dollars"))).as[Long].head() == 6L)
   }
 
+  test("SQL UPDATE, MERGE and DELETE keyed on a GENERATED column " +
+    "reach pre-era rows in every write mode") {
+    val w = Files.createTempDirectory("vgen_dml").toString
+    spark.conf.set("spark.sql.catalog.ggdml", classOf[GraftCatalog].getName)
+    spark.conf.set("spark.sql.catalog.ggdml.warehouse", w)
+    var n = 0
+    // a fresh table per statement: its 40 pre-era rows carry `dollars`
+    // only as an nc-era computation (dollars == k) until a DML
+    // rewrites them; one post-era row (k 100, dollars 7) follows
+    def table(mode: Option[String]): String = {
+      n += 1
+      val path = s"$w/g$n"
+      VersionedTable.commit(spark, path,
+        (1L to 40L).map(i => (i, i * 100)).toDF("k", "cents"),
+        append = false)
+      mode.foreach(m => Seq(VersionedTable.DeleteModeProp,
+        VersionedTable.UpdateModeProp, VersionedTable.MergeModeProp)
+        .foreach(VersionedTable.setTableProperty(spark, path, _, m)))
+      spark.sql(s"CALL ggdml.system.add_generated_column('g$n', " +
+        "'dollars', 'BIGINT', 'cents DIV 100')")
+      VersionedTable.commit(spark, path,
+        Seq((100L, 700L)).toDF("k", "cents"), append = true)
+      s"ggdml.g$n"
+    }
+    def keys(t: String, where: String): Set[Long] =
+      spark.sql(s"SELECT k FROM $t WHERE $where").as[Long].collect().toSet
+    for (mode <- Seq(Some("copy-on-write"), Some("merge-on-read"), None)) {
+      val t1 = table(mode)
+      assert(keys(t1, "dollars >= 30") == (30L to 40L).toSet, s"$mode read")
+      spark.sql(s"UPDATE $t1 SET cents = cents + 1 WHERE dollars >= 30")
+      assert(keys(t1, "cents % 100 = 1") == (30L to 40L).toSet,
+        s"$mode UPDATE")
+      val t2 = table(mode)
+      spark.sql(s"MERGE INTO $t2 t USING (SELECT 35L AS d) s " +
+        "ON t.dollars = s.d WHEN MATCHED THEN UPDATE SET cents = t.cents + 1")
+      assert(keys(t2, "cents % 100 = 1") == Set(35L), s"$mode MERGE")
+      val t3 = table(mode)
+      spark.sql(s"DELETE FROM $t3 WHERE dollars >= 30 AND k % 2 = 0")
+      assert(keys(t3, "true") == (1L to 40L).filterNot(k =>
+        k >= 30 && k % 2 == 0).toSet + 100L, s"$mode DELETE (residual)")
+      val t4 = table(mode)
+      spark.sql(s"DELETE FROM $t4 WHERE dollars >= 38")
+      assert(keys(t4, "true") == (1L to 37L).toSet + 100L, s"$mode DELETE")
+    }
+  }
+
   test("declaration guards: unknown refs, derived refs, and " +
     "non-determinism refuse; referenced columns lock rename/drop") {
     val t = freshTable()
